@@ -25,6 +25,13 @@ import org.apache.spark.sql.types.IntegerType
   */
 object CandyEtl {
 
+  // The four report frames below are single-file CSVs, written by one
+  // task (SingleFileCsvSink's coalesce(1)). Each ends in
+  // `repartition(1).sortWithinPartitions(<keys>)`: the frame comes back
+  // totally ordered, its sort runs in that one task, and there is no
+  // range-partition sampling job, which an `orderBy` would add before the
+  // coalesce collapsed its sort into one task anyway.
+
   /** Explode transactions into priced order lines (P1/P2/P4 + J1).
     *
     * `posexplode` (not `explode_outer`) both flattens and numbers each
@@ -89,7 +96,9 @@ object CandyEtl {
       .drop("alloc_qty", "__alloc_key")
   }
 
-  /** `order_line_items` report frame (golden shape, sorted — O1). */
+  /** `order_line_items` report frame (golden shape, O1): one partition,
+    * sorted by (order_id, product_id).
+    */
   def orderLineItems(allocated: DataFrame): DataFrame =
     allocated
       .select(
@@ -98,10 +107,12 @@ object CandyEtl {
         col("quantity"),
         col("sales_price").as("unit_price"),
         col("line_total"))
-      .orderBy("order_id", "product_id")
+      .repartition(1)
+      .sortWithinPartitions("order_id", "product_id")
 
   /** `products_updated` report frame: every product, stock minus what the
-    * allocation filled (left join + coalesce ≙ reference J2/P6 writeback).
+    * allocation filled (left join + coalesce ≙ reference J2/P6 writeback);
+    * one partition, sorted by product_id.
     */
   def productsUpdated(products: DataFrame, allocated: DataFrame): DataFrame =
     Allocation
@@ -117,12 +128,14 @@ object CandyEtl {
         col("product_id"),
         col("product_name"),
         col("current_stock").cast(IntegerType).as("current_stock"))
-      .orderBy("product_id")
+      .repartition(1)
+      .sortWithinPartitions("product_id")
 
   /** `orders` report frame (A1 + D1 + J3): per-order totals joined to the
     * deduped transaction headers. `num_items` counts cancelled lines (the
     * golden orders.csv does); transactions whose every line was null-qty
-    * vanish via the inner join — also golden behaviour.
+    * vanish via the inner join — also golden behaviour. One partition,
+    * sorted by order_id.
     */
   def orders(transactions: DataFrame, allocated: DataFrame): DataFrame = {
     val headers = transactions
@@ -139,11 +152,14 @@ object CandyEtl {
     summary
       .join(headers, Seq("order_id"), "inner")
       .select("order_id", "order_datetime", "customer_id", "total_amount", "num_items")
-      .orderBy("order_id")
+      .repartition(1)
+      .sortWithinPartitions("order_id")
   }
 
   /** `daily_summary` report frame (A2 + P7 + A3 + J6), date as DateType;
-    * render with [[formatDailySummary]] when writing CSV.
+    * render with [[formatDailySummary]] when writing CSV. One partition,
+    * sorted by date. A caller that also writes `orders` should pass it
+    * persisted, or `orders` is computed twice.
     */
   def dailySummary(orders: DataFrame, allocated: DataFrame): DataFrame = {
     val daily = orders
@@ -161,7 +177,8 @@ object CandyEtl {
       .agg(round(sum("line_profit"), 2).cast(Money).as("total_profit"))
     daily
       .join(dailyProfit, Seq("date"), "inner")
-      .orderBy("date")
+      .repartition(1)
+      .sortWithinPartitions("date")
   }
 
   /** Golden rendering: `yyyy-MM-dd` (fixes the reference's `yyyy-M-dd`). */

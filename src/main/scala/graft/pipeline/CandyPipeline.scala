@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import java.time.LocalDate
+import scala.collection.immutable.ListMap
 
 /** End-to-end candy-store pipeline (reference main.py:141-205, EP1→EP2→EP3),
   * producing the five reports of SURVEY.md §1.2 as single-file CSVs.
@@ -20,6 +21,11 @@ import java.time.LocalDate
   * MongoDB per day in both EP1 and EP2, data_processor.py:176,310-313), and
   * there is no per-day driver round-trip — the whole date range is one
   * lineage.
+  *
+  * Each report is computed once. `orders` and `daily_summary` each feed a
+  * later frame as well as their own file, so both are persisted; the row
+  * counts in [[Result]] and the cancelled-line count are observed on the
+  * writes themselves, so nothing re-counts a report after it is written.
   */
 class CandyPipeline(
     spark: SparkSession,
@@ -31,13 +37,19 @@ class CandyPipeline(
     reloadInventoryDaily: Boolean = false,
     dimConfig: Option[CandyConfig] = None) {
 
+  /** The report frames, the number of cancelled order lines, and the
+    * rows written per report, keyed by report name in write order
+    * (`order_line_items`, `products_updated`, `orders`, `daily_summary`,
+    * `sales_profit_forecast`).
+    */
   final case class Result(
       orderLineItems: DataFrame,
       productsUpdated: DataFrame,
       orders: DataFrame,
       dailySummary: DataFrame,
       forecast: DataFrame,
-      cancelledLines: Long)
+      cancelledLines: Long,
+      rowsWritten: ListMap[String, Long])
 
   /** Run all stages and write the five CSV reports. */
   def run(): Result = {
@@ -69,18 +81,21 @@ class CandyPipeline(
       else allocated
     val stock = CandyEtl.productsUpdated(products, stockSource)
     val orders = CandyEtl.orders(transactions, allocated)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val daily = CandyEtl.dailySummary(orders, allocated)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val forecast = forecastFrame(daily)
 
-    SingleFileCsvSink.write(lineItems, outputDir, "order_line_items.csv")
-    SingleFileCsvSink.write(stock, outputDir, "products_updated.csv")
-    SingleFileCsvSink.write(orders, outputDir, "orders.csv")
-    SingleFileCsvSink.write(CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv")
-    SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv")
-
-    val cancelled = allocated.filter(col("quantity") === 0).count()
-    Result(lineItems, stock, orders, daily, forecast, cancelled)
+    val (lineItemRows, cancelled) = CandyPipeline.writeLineItems(lineItems, outputDir)
+    val rows = ListMap(
+      "order_line_items" -> lineItemRows,
+      "products_updated" -> SingleFileCsvSink.write(stock, outputDir, "products_updated.csv"),
+      "orders" -> SingleFileCsvSink.write(orders, outputDir, "orders.csv"),
+      "daily_summary" -> SingleFileCsvSink.write(
+        CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv"),
+      "sales_profit_forecast" ->
+        SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv"))
+    Result(lineItems, stock, orders, daily, forecast, cancelled, rows)
   }
 
   /** Fit sales + profit series and emit the forecast frame
@@ -95,11 +110,12 @@ class CandyPipeline(
       StructField("forecasted_profit", Money)))
     val rows = dailySummary
       .select("date", "total_sales", "total_profit")
-      .orderBy("date")
       .collect() // ≤ one row per business day — driver-side by design (§2.9)
     if (rows.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
+      // collected unsorted: fitSeasonal sorts the series by date here on
+      // the driver, where a distributed sort would cost a sampling job
       val series = rows.map { r =>
         (r.getDate(0).toLocalDate,
           r.getDecimal(1).doubleValue(),
@@ -127,6 +143,15 @@ class CandyPipeline(
 }
 
 object CandyPipeline {
+  /** Write `order_line_items.csv`; returns its row count and the number of
+    * cancelled lines (quantity 0), both observed on the one write job.
+    */
+  private[pipeline] def writeLineItems(lineItems: DataFrame, outputDir: String): (Long, Long) = {
+    val m = SingleFileCsvSink.writeObserved(lineItems, outputDir, "order_line_items.csv",
+      count(when(col("quantity") === 0, true)).as("cancelled"))
+    (m(SingleFileCsvSink.Rows).asInstanceOf[Long], m("cancelled").asInstanceOf[Long])
+  }
+
   /** Build from the reference-shaped environment config. */
   def fromConfig(
       spark: org.apache.spark.sql.SparkSession,

@@ -37,15 +37,18 @@ object CandyRun {
         "SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
       .appName("candy-store-etl")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val result = CandyPipeline.fromConfig(spark, cfg).run()
-    println(s"order_line_items: ${result.orderLineItems.count()} rows")
-    println(s"products_updated: ${result.productsUpdated.count()} rows")
-    println(s"orders:           ${result.orders.count()} rows")
-    println(s"daily_summary:    ${result.dailySummary.count()} rows")
-    println(s"forecast:         ${result.forecast.count()} rows")
-    println(s"cancelled lines:  ${result.cancelledLines}")
-    spark.stop()
+    // stopped on every path: the caller's JVM may build another session,
+    // and getOrCreate would otherwise reuse this context and its confs
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      val result = CandyPipeline.fromConfig(spark, cfg).run()
+      val rows = result.rowsWritten
+      println(s"order_line_items: ${rows("order_line_items")} rows")
+      println(s"products_updated: ${rows("products_updated")} rows")
+      println(s"orders:           ${rows("orders")} rows")
+      println(s"daily_summary:    ${rows("daily_summary")} rows")
+      println(s"forecast:         ${rows("sales_profit_forecast")} rows")
+      println(s"cancelled lines:  ${result.cancelledLines}")
+    } finally spark.stop()
   }
 }

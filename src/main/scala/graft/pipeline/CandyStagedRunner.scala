@@ -68,13 +68,14 @@ class CandyStagedRunner(spark: SparkSession, cfg: CandyConfig) {
         allocated.filter(col("day_idx") === lit(cfg.endDate.toEpochDay))
       else allocated
     val stock = CandyEtl.productsUpdated(products, stockSource)
+    // persisted like CandyPipeline's: the orders sink and the daily
+    // summary stage both read it
     val orders = CandyEtl.orders(transactions, allocated)
-    SingleFileCsvSink.write(lineItems, cfg.outputPath, "order_line_items.csv")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (_, cancelled) = CandyPipeline.writeLineItems(lineItems, cfg.outputPath)
     SingleFileCsvSink.write(stock, cfg.outputPath, "products_updated.csv")
     SingleFileCsvSink.write(orders, cfg.outputPath, "orders.csv")
-    TransactionsOut(
-      allocated, lineItems, stock, orders,
-      allocated.filter(col("quantity") === 0).count())
+    TransactionsOut(allocated, lineItems, stock, orders, cancelled)
   }
 
   /** Stage 3 — `generate_daily_summary` (EP3). */
@@ -98,6 +99,7 @@ class CandyStagedRunner(spark: SparkSession, cfg: CandyConfig) {
   /** Stage 5 — `cleanup`: release the persisted handoffs. */
   def cleanup(t: TransactionsOut, daily: DataFrame): Unit = {
     t.allocated.unpersist()
+    t.orders.unpersist()
     daily.unpersist()
   }
 

@@ -105,6 +105,15 @@ class PipelineOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(ex.getMessage.contains("did not converge"))
   }
 
+  test("connected components: a misspelt roundMode is rejected, not read as auto") {
+    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    spark.conf.set("spark.graft.cc.roundMode", "shufle")
+    val ex =
+      try intercept[IllegalArgumentException](ConnectedComponents.byMinLabel(edges))
+      finally spark.conf.unset("spark.graft.cc.roundMode")
+    Seq("shufle", "auto", "shuffle").foreach(w => assert(ex.getMessage.contains(w)))
+  }
+
   test("asof backward: all carried values come from the SAME winning right row") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val left = Seq((1L, 10L, ts("2024-01-01 10:00:00"))).toDF("event_id", "user_id", "ts")

@@ -31,7 +31,9 @@ object GraftSession {
       // digest sort at 123M windows ran 32-wide → ~150 MB+spill per
       // task → 2.5× docs cost 4.5× time; at 128-wide the same query
       // returned to linear (q134 106→53 s). On a cluster size this to
-      // ~8× total cores for the same reason.
+      // ~8× total cores for the same reason. Under AQE
+      // `conf.numShufflePartitions` returns this 8× width, so explicit
+      // `repartition(n, …)` sites must use `defaultNumShufflePartitions`.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (shufflePartitions * 8).toString)
       // The advisory target AQE coalesces DOWN to is COMPRESSED shuffle

@@ -78,7 +78,7 @@ object GraphScaleBench {
     // deterministic md5 keep-rule as q129, threshold shrinking with k.
     def triSampled(dir: String, k: Int): Unit = {
       val keep = math.round(300.0 * math.pow(k.toDouble, -1.0 / 3)).toInt
-      val nPart = spark.sessionState.conf.numShufflePartitions
+      val nPart = graft.queries.GraphQueries.corePartitions(spark)
       graft.queries.GraphQueries.trianglePerPartCredits(
         graft.queries.GraphQueries.bothDirections(
           graft.queries.GraphQueries.coPurchaseEdgesOf(

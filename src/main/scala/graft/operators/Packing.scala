@@ -69,13 +69,13 @@ object Packing {
     * corpus. This is instead the classic two-pass distributed scan, the
     * [[Ranking.globalRowNumber]] shape with token sums in place of row
     * counts: ONE range exchange on the order key (partition i's rows
-    * all order before partition i+1's), per-partition token totals — a
-    * map-side-combinable aggregate, ≤ nPart rows — prefix-summed via
-    * the explode trick and broadcast-joined back, then a streaming
-    * O(1)-state `mapPartitions` pass emits `pid offset + running local
-    * sum`. Every stage is parallel; nothing is driver-side.
+    * all order before partition i+1's), per-partition token totals read
+    * back in one job and prefix-summed on the driver
+    * ([[Ranking.pidOffsets]], ≤ one entry per range partition), then a
+    * streaming O(1)-state `mapPartitions` pass emits `pid offset +
+    * running local sum`. Every pass over the rows is parallel.
     *
-    * The sorted frame feeds TWO consumers (the totals aggregate and the
+    * The sorted frame feeds TWO consumers (the totals job and the
     * fold) that must observe the SAME physical partition layout. That
     * invariant is enforced by MATERIALIZATION, not plan canonicalization:
     * the range exchange runs exactly once, inside an eager
@@ -107,12 +107,6 @@ object Packing {
       sizeCol: String,
       orderCols: Seq[String],
       outCol: String = "tok_start"): DataFrame = {
-    val spark = df.sparkSession
-    val conf = spark.sessionState.conf
-    val nPart = math.max(
-      conf.numShufflePartitions,
-      conf.getConf(org.apache.spark.sql.internal.SQLConf
-        .COALESCE_PARTITIONS_INITIAL_PARTITION_NUM).getOrElse(0))
     val order: Seq[Column] = orderCols.map(col)
     // the trailing localCheckpoint is the correctness pin: ONE range
     // exchange executes (inside this materialization) and every
@@ -128,47 +122,30 @@ object Packing {
       .sortWithinPartitions(order: _*)
       .select(col("*"), spark_partition_id().as("__pid"))
       .localCheckpoint(true)
-    val stats = sorted.groupBy(col("__pid"))
-      .agg(sum(greatest(coalesce(col(sizeCol).cast("long"), lit(0L)), lit(0L)))
-        .as("__tot"))
-    // prefix-sum via explode: partition p's total lands on every later
-    // partition, then one hash agg — ≤ nPart² intermediate rows total.
-    // offsets carry rows ONLY for pids with at least one non-empty
-    // predecessor; the fold coalesces absent pids (pid 0, leading-empty
-    // runs) to offset 0.
-    val offsets = stats
-      .filter(col("__pid") < lit(nPart - 1))
-      .select(
-        explode(sequence(col("__pid") + 1, lit(nPart - 1))).as("__pid"),
-        col("__tot"))
-      .groupBy(col("__pid")).agg(sum(col("__tot")).as("__off"))
-    // broadcast hash join streams the sorted side — partitioning and
-    // within-partition order both survive into the fold below
-    val joined = sorted.join(broadcast(offsets), Seq("__pid"), "left")
-    val inSchema = joined.schema
-    val pi = inSchema.fieldIndex("__pid")
-    val oi = inSchema.fieldIndex("__off")
-    val si = inSchema.fieldIndex(sizeCol)
+    val offsets = Ranking.pidOffsets(sorted, lit(0L),
+      greatest(coalesce(col(sizeCol).cast("long"), lit(0L)), lit(0L)))
+      .map { case (pid, (_, off)) => pid -> off }
+    val pi = sorted.schema.fieldIndex("__pid")
+    val si = sorted.schema.fieldIndex(sizeCol)
     val outSchema = df.schema.add(outCol, LongType, nullable = false)
     implicit val enc: Encoder[Row] = Encoders.row(outSchema)
     val width = df.schema.length
-    joined.mapPartitions { rows =>
-      // O(1) state: running local token sum, reset per pid run (AQE may
-      // coalesce several contiguous pids into one task)
+    sorted.mapPartitions { rows =>
+      // O(1) state: running token offset, restarted at each pid run (AQE
+      // may coalesce several contiguous pids into one task)
       var curPid = -1
       var run = 0L
       rows.map { r =>
         val pid = r.getInt(pi)
-        if (pid != curPid) { curPid = pid; run = 0L }
+        if (pid != curPid) { curPid = pid; run = offsets(pid) }
         val s =
           if (r.isNullAt(si)) 0L
           else math.max(0L, r.get(si).asInstanceOf[Number].longValue())
-        val off = if (r.isNullAt(oi)) 0L else r.getLong(oi)
-        val start = off + run
+        val start = run
         run += s
-        // usingColumns join lays out [__pid, df columns…, __off]; emit
-        // the original columns + the offset
-        Row.fromSeq(r.toSeq.slice(1, 1 + width) :+ start)
+        // the sorted layout is [df columns…, __pid]; emit the original
+        // columns + the offset
+        Row.fromSeq(r.toSeq.take(width) :+ start)
       }
     }
   }

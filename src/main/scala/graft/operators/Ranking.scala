@@ -45,19 +45,6 @@ object Ranking {
       .limit(k)
       .withColumn(out, (monotonically_increasing_id() + 1L).cast("int"))
 
-  /** Exact global `row_number` over `order` for EVERY row, without a
-    * single-partition exchange.
-    *
-    * Plan shape: range-repartition on the sort key (partition boundaries
-    * from the sampler, so partition i's rows all order before partition
-    * i+1's), local sort, then `monotonically_increasing_id()` — whose
-    * value is (partition << 33) + local row index, i.e. the LOCAL rank
-    * is `mid - min(mid)` of the partition. Per-partition (min, count)
-    * is a tiny map-side-combinable aggregate; offsets are a prefix sum
-    * over ≤ numShufflePartitions rows built by an explode (each
-    * partition's count contributes to every later partition) — no
-    * non-equi join, no window, nothing driver-side — and broadcast back.
-    */
   /** True iff `df` replays as a narrow per-row pass over RDD-backed
     * blocks: only Project/Filter/alias operators over a LogicalRDD leaf
     * (i.e. a prior localCheckpoint). Such a frame does not need the
@@ -85,28 +72,27 @@ object Ranking {
     ok(df.queryExecution.analyzed)
   }
 
+  /** Exact global `row_number` over `order` for EVERY row, without a
+    * single-partition exchange.
+    *
+    * Plan shape: range-repartition on the sort key (partition boundaries
+    * from the sampler, so partition i's rows all order before partition
+    * i+1's), local sort, then `monotonically_increasing_id()` — whose
+    * value is (partition << 33) + local row index, i.e. the LOCAL rank
+    * is `mid - min(mid)` of the partition. Per-partition (min, count)
+    * comes back to the driver in one job ([[pidOffsets]]); the rank is
+    * then a per-row literal lookup — no aggregate, no join, no shuffle
+    * after the sort.
+    */
   def globalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame = {
-    val conf = df.sparkSession.sessionState.conf
-    // Upper bound on the partition ids the range shuffle can produce:
-    // without an explicit count, repartitionByRange starts from
-    // numShufflePartitions — or, under AQE, from
-    // coalescePartitions.initialPartitionNum when that is set HIGHER
-    // (a common tuning). Enumerating offsets past the actual width is
-    // harmless (ghost pids carry no stats row and vanish in the join);
-    // enumerating short of it would silently drop those partitions'
-    // counts from every later offset — wrong ranks, no error.
-    val nPart = math.max(
-      conf.numShufflePartitions,
-      conf.getConf(org.apache.spark.sql.internal.SQLConf
-        .COALESCE_PARTITIONS_INITIAL_PARTITION_NUM).getOrElse(0))
     // TWO eager localCheckpoints, each load-bearing:
     //  (a) cost — the INPUT pin: the range exchange's boundary SAMPLING
     //      is its own job over the child; unpinned, it would re-run the
     //      caller's whole upstream (scans, joins, aggs) once more before
     //      the shuffle even starts (measured ~1.9× on q104);
     //  (b) correctness — the SORTED-frame pin: the frame below is
-    //      consumed twice (per-partition stats + join-back), and the two
-    //      consumers MUST see the same partition layout.
+    //      consumed twice (the per-pid stats job and the ranked output),
+    //      and the two consumers MUST see the same partition layout.
     //      RangePartitioner's sample seed mixes in the shuffle RDD's id,
     //      so two INDEPENDENT exchanges would draw different boundaries
     //      — corrupted ranks, no error. Materializing the sorted frame
@@ -126,8 +112,7 @@ object Ranking {
     // ~0.3 s of pure task overhead per stage); without it AQE coalesces
     // ADJACENT range partitions when bytes are small — contiguity keeps
     // the pid-order-equals-rank-order invariant — and leaves the full
-    // width when the frame is actually large. `nPart` above is the upper
-    // bound the prefix-sum explode enumerates against.
+    // width when the frame is actually large.
     val pinned = if (cheapReplay(df)) df else df.localCheckpoint(true)
     val sorted = pinned
       .repartitionByRange(order: _*)
@@ -136,25 +121,50 @@ object Ranking {
         spark_partition_id().as("__pid"),
         monotonically_increasing_id().as("__mid"))
       .localCheckpoint(true)
-    val stats = sorted.groupBy(col("__pid"))
-      .agg(min(col("__mid")).as("__mn"), count(lit(1)).as("__cnt"))
-    // prefix-sum via explode: partition p's count lands on every later
-    // partition, then one hash agg — ≤ nPart² intermediate rows total
-    val contrib = stats
-      .filter(col("__pid") < lit(nPart - 1))
-      .select(
-        explode(sequence(col("__pid") + 1, lit(nPart - 1))).as("__pid"),
-        col("__cnt"))
-      .groupBy(col("__pid")).agg(sum(col("__cnt")).as("__off"))
-    val offsets = stats.join(contrib, Seq("__pid"), "left")
-      .select(col("__pid"), col("__mn"),
-        coalesce(col("__off"), lit(0L)).as("__off"))
+    // rank = offset + (mid - min mid) + 1, folded per pid into one base
+    val base = pidOffsets(sorted, col("__mid"), lit(1L))
+      .map { case (pid, (mn, off)) => pid -> (off - mn + 1L) }
     // rank is emitted as LONG: this helper exists for corpus-fraction
     // frames, where an int rank would overflow negative past 2^31 rows
     // with no error. Callers that want an int column cast down AFTER
     // whatever bounds their frame (e.g. q104 subtracts a per-list base).
-    sorted.join(broadcast(offsets), "__pid")
-      .withColumn(out, col("__off") + col("__mid") - col("__mn") + 1L)
-      .drop("__pid", "__mid", "__mn", "__off")
+    sorted
+      .withColumn(out, element_at(typedLit(base), col("__pid")) + col("__mid"))
+      .drop("__pid", "__mid")
+  }
+
+  /** Placement of each range partition of a sorted, `__pid`-stamped
+    * checkpoint, read back in ONE job — a narrow pass over the
+    * checkpoint blocks, no shuffle. For every pid that holds rows:
+    * (minimum of `first`, sum of `weight` over all LOWER pids). Pid
+    * order is sort order: range partition i's rows all order before
+    * partition i+1's, and AQE only coalesces adjacent range partitions
+    * into one pid. The exclusive prefix sum runs on the driver over at
+    * most one entry per range partition.
+    */
+  private[operators] def pidOffsets(
+      sorted: DataFrame, first: Column, weight: Column): Map[Int, (Long, Long)] = {
+    import sorted.sparkSession.implicits._
+    val perPid = sorted
+      .select(col("__pid"), first.cast("long"), weight.cast("long"))
+      .as[(Int, Long, Long)]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.Map.empty[Int, (Long, Long)]
+        rows.foreach { case (pid, f, w) =>
+          val (mn, sum) = acc.getOrElse(pid, (f, 0L))
+          acc(pid) = (math.min(mn, f), sum + w)
+        }
+        acc.iterator.map { case (pid, (mn, sum)) => (pid, mn, sum) }
+      }
+      .collect()
+      .groupMapReduce(_._1)(t => (t._2, t._3)) {
+        case ((m1, s1), (m2, s2)) => (math.min(m1, m2), s1 + s2)
+      }
+    var before = 0L
+    perPid.toSeq.sortBy(_._1).map { case (pid, (mn, sum)) =>
+      val placed = pid -> ((mn, before))
+      before += sum
+      placed
+    }.toMap
   }
 }

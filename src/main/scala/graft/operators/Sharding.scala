@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *    budget), not an error.
   *
   * Scale shape: [[Packing.tokenOffsets]]' two-pass distributed prefix
-  * sum over the order (ONE range exchange, nothing driver-side), a
+  * sum over the order (ONE range exchange; only the per-partition
+  * totals meet on the driver), a
   * ONE-ROW broadcast total, and a pure-function shard id — no second
   * shuffle, the q148 discipline.
   */

@@ -47,12 +47,22 @@ import org.apache.spark.sql.functions._
 object GraphQueries {
   private type Q = (SparkSession, String) => DataFrame
 
+  /** The width of every explicit edge-scale repartition below: one
+    * partition per core (`spark.sql.shuffle.partitions`, see
+    * `GraftSession`). Not `conf.numShufflePartitions`, which under AQE
+    * returns `coalescePartitions.initialPartitionNum` (8× cores): an
+    * explicit count is exempt from coalescing, so every triangle stage
+    * would run 8× the tasks the work needs.
+    */
+  private[graft] def corePartitions(s: SparkSession): Int =
+    s.sessionState.conf.defaultNumShufflePartitions
+
   private def byDegThenId(du: Column, u: Column, dv: Column, v: Column): Column =
     du < dv || (du === dv && u < v)
 
   /** Per-part triangle participation counts in the co-purchase graph. */
   private def q110(s: SparkSession, d: String): DataFrame = {
-    val nPart = s.sessionState.conf.numShufflePartitions
+    val nPart = corePartitions(s)
     // per-order baskets → all directed co-purchase pairs (Σ basket², the
     // natural basket size squared) → per-node sorted neighbor sets.
     // collect_set dedupes edge multiplicity across orders, so no
@@ -128,8 +138,7 @@ object GraphQueries {
     * queries' oracles define their graphs over.
     */
   private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
-    coPurchaseEdgesOf(
-      Tables.lineitem(s, d), s.sessionState.conf.numShufflePartitions)
+    coPurchaseEdgesOf(Tables.lineitem(s, d), corePartitions(s))
 
   private[graft] def coPurchaseEdgesOf(lineitem: DataFrame, nPart: Int): DataFrame =
     lineitem
@@ -177,7 +186,7 @@ object GraphQueries {
     * oracle scales; a 100 TB run drops it and keeps the estimate.
     */
   private def q129(s: SparkSession, d: String): DataFrame = {
-    val nPart = s.sessionState.conf.numShufflePartitions
+    val nPart = corePartitions(s)
     val p = 0.027 // p³ for p = 0.3
     val edges = coPurchaseEdges(s, d)
     def count3T(e: DataFrame): DataFrame =

@@ -131,6 +131,64 @@ object RetrievalQueries {
         r6(col("col")).as("mean_val"))
   }
 
+  /** The shared scoring prefix of q104/q132: per-doc BM25 and TF-cosine
+    * scores, `(doc_id, bm25)` and `(doc_id, cos)`, for the 3-term query,
+    * both rounded to 1e-6 BEFORE any ranking (the q101/q42 discipline —
+    * `ln` is not IEEE-exact across engines). Both cover exactly the
+    * documents containing ≥1 query term.
+    *
+    * Row-local: document length, the per-term tf and Σtf² (the squared
+    * TF norm) come from each document's OWN token array — `size`,
+    * `size(filter(…))`, and one `aggregate` over `array_sort` that adds
+    * 2·run − 1 per token (so each run of equal tokens sums to run²).
+    * No (doc, token) corpus shuffle exists. The corpus statistics
+    * (n_docs, avgdl, per-term df) are one one-row aggregate attached to
+    * the BM25 side by broadcast. This is the oracle's (doc, token)
+    * aggregate spelling computed in one row pass, pinned equal to it in
+    * `RetrievalQueriesSpec`.
+    *
+    * Precondition: `doc_id` is a key of `docs`. Each row is scored as
+    * its own document, where the aggregate spelling would merge rows
+    * sharing an id.
+    */
+  private[graft] def hybridScores(docs: DataFrame): (DataFrame, DataFrame) = {
+    val terms = Seq("spark", "merge", "window")
+    val k1 = 1.2
+    val b = 0.75
+    val sumSq = aggregate(array_sort(col("toks")),
+      struct(lit(null).cast("string").as("p"), lit(0L).as("run"), lit(0L).as("sq")),
+      (acc, t) => {
+        val run = when(t === acc("p"), acc("run") + 1L).otherwise(lit(1L))
+        struct(t.as("p"), run.as("run"), (acc("sq") + run * 2L - 1L).as("sq"))
+      },
+      acc => acc("sq"))
+    // documents without a non-empty token drop out here, as from the
+    // oracle's `toks` CTE — they count toward neither n_docs nor avgdl
+    val perDoc = Spread.ensure(docs.select("doc_id", "text"))
+      .select(col("doc_id"),
+        filter(split(col("text"), " "), t => length(t) > 0).as("toks"))
+      .select((Seq(col("doc_id"), size(col("toks")).as("dl"), sumSq.as("sq")) ++
+        terms.map(t => size(filter(col("toks"), _ === t)).as(s"tf_$t"))): _*)
+      .filter(col("dl") > 0)
+    val stats = perDoc.agg(
+      count(lit(1)).as("n_docs"), (avg(col("dl")).as("avgdl") +:
+        terms.map(t => count(when(col(s"tf_$t") > 0, 1)).as(s"df_$t"))): _*)
+    // a term a document lacks adds an exact 0.0 to its BM25 sum
+    def part(t: String): Column = {
+      val (tf, df) = (col(s"tf_$t"), col(s"df_$t"))
+      log((col("n_docs") - df + lit(0.5)) / (df + lit(0.5)) + lit(1)) *
+        (tf * lit(k1 + 1)) /
+        (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
+    }
+    val dot = terms.map(t => col(s"tf_$t")).reduce(_ + _)
+    val hits = perDoc.filter(dot > 0)
+    val bm25 = hits.crossJoin(broadcast(stats))
+      .select(col("doc_id"), r6(terms.map(part).reduce(_ + _)).as("bm25"))
+    val cosine = hits.select(col("doc_id"),
+      r6(dot / (sqrt(col("sq")) * sqrt(lit(3.0)))).as("cos"))
+    (bm25, cosine)
+  }
+
   /** Hybrid retrieval via reciprocal-rank fusion (Cormack et al. 2009,
     * k=60): the BM25 ranking fused with a TF-cosine ranking of the same
     * conjunctive query. The two rankers disagree exactly where hybrid
@@ -143,50 +201,8 @@ object RetrievalQueries {
     * RRF sum — pure rational arithmetic on small ints — is bit-stable
     * across engines.
     */
-  /** The shared scoring prefix of q104/q132: per-doc BM25 and TF-cosine
-    * scores for the 3-term query, both rounded to 1e-6 BEFORE any
-    * ranking (the q101/q42 discipline — `ln` is not IEEE-exact across
-    * engines). ONE corpus-scale shuffle: (doc, token) partial counts;
-    * document length, corpus stats, norms, and the query-term tf all
-    * derive from that frame, so the token stream never shuffles twice,
-    * and its three consumers share the exchange via ReuseExchange.
-    */
-  private def hybridScores(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val terms = Seq("spark", "merge", "window")
-    val k1 = 1.2
-    val b = 0.75
-    val toks = Spread.ensure(Tables.documents(s, d).select("doc_id", "text"))
-      .select(
-        col("doc_id"),
-        explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
-    val tfAll = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-    val dl = tfAll.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    val tf = tfAll.filter(col("token").isInCollection(terms))
-    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val bm25 = tf.join(broadcast(dfreq), "token")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1)))
-      .withColumn("part",
-        col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("doc_id")
-      .agg(r6(sum(col("part"))).as("bm25"))
-    val norms = tfAll.groupBy("doc_id")
-      .agg(sqrt(sum(col("tf") * col("tf"))).as("nrm"))
-    val cosine = tf.groupBy("doc_id").agg(sum(col("tf")).as("dot"))
-      .join(norms, "doc_id")
-      .select(
-        col("doc_id"),
-        r6(col("dot") / (col("nrm") * sqrt(lit(3.0)))).as("cos"))
-    (bm25, cosine)
-  }
-
   private def q104(s: SparkSession, d: String): DataFrame = {
-    val (bm25, cosine) = hybridScores(s, d)
+    val (bm25, cosine) = hybridScores(Tables.documents(s, d))
     // RRF consumes the FULL rankings (a fused top-20 doc may sit at rank
     // 5 in one list and rank 5000 in the other, and 1/(60+r) needs the
     // exact 5000), so the ranks come from the distributed global ranking
@@ -240,7 +256,7 @@ object RetrievalQueries {
     */
   private def q132(s: SparkSession, d: String): DataFrame = {
     val armK = 200
-    val (bm25, cosine) = hybridScores(s, d)
+    val (bm25, cosine) = hybridScores(Tables.documents(s, d))
     val tb = graft.operators.Ranking
       .topK(bm25, armK, Seq(col("bm25").desc, col("doc_id")), "r_bm25")
     val tc = graft.operators.Ranking

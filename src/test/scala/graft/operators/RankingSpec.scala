@@ -76,6 +76,62 @@ class RankingSpec extends AnyFunSuite with SparkTestBase {
       "rank column must be long: this helper targets corpus-fraction frames")
   }
 
+  test("globalRowNumber of an empty frame yields zero rows") {
+    val got = Ranking.globalRowNumber(df.filter(col("id") < 0), order, "rn")
+    assert(got.collect().isEmpty)
+    assert(got.schema("rn").dataType == org.apache.spark.sql.types.LongType)
+  }
+
+  test("globalRowNumber ranks 1..n when AQE coalesces several pids into one task") {
+    // 40 rows under 37 initial range partitions: AQE merges adjacent
+    // ranges, so a task's pid covers several of the sampler's ranges
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    spark.conf.set(key, "37")
+    try {
+      val small = df.filter(col("id") <= 40)
+      val expected = small.withColumn("rn",
+        row_number().over(Window.orderBy(order: _*)))
+        .collect().map(r => (r.getLong(0), r.getInt(2).toLong)).toMap
+      val got = Ranking.globalRowNumber(small, order, "rn")
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
+      assert(got.values.toSeq.sorted == (1L to 40L))
+      assert(got == expected)
+    } finally spark.conf.unset(key)
+  }
+
+  test("the rank step adds exactly one Spark job after the sorted checkpoint") {
+    val sc = spark.sparkContext
+    // job ids are handed out in submission order, so the jobs a block
+    // runs are the gap between two marker jobs' ids
+    def marker(): Int = {
+      val f = sc.submitJob(sc.parallelize(Seq(0), 1),
+        (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ())
+      f.get()
+      f.jobIds.head
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      val before = marker()
+      val result = body
+      (result, marker() - before - 1)
+    }
+    // an input that is already a checkpoint skips the input pin, so the
+    // sorted checkpoint below is all globalRowNumber runs before ranking
+    val pinned = df.localCheckpoint(true)
+    val (_, sortedOnly) = jobsOf {
+      pinned.repartitionByRange(order: _*)
+        .sortWithinPartitions(order: _*)
+        .select(col("*"),
+          spark_partition_id().as("__pid"),
+          monotonically_increasing_id().as("__mid"))
+        .localCheckpoint(true)
+    }
+    val (ranked, ranking) = jobsOf(Ranking.globalRowNumber(pinned, order, "rn"))
+    assert(ranking == sortedOnly + 1,
+      s"globalRowNumber ran $ranking jobs, the sorted checkpoint alone $sortedOnly")
+    // and reading the ranks is one narrow pass over the checkpoint
+    assert(jobsOf(ranked.collect())._2 == 1)
+  }
+
   test("topK matches the window spelling's top slice, ranks 1..k") {
     val expected = df.withColumn("rn",
       row_number().over(Window.orderBy(order: _*)))

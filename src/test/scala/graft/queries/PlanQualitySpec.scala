@@ -294,6 +294,22 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("ShuffledHashJoin [dst"), p)
   }
 
+  test("q110 repartitions at one partition per core, not AQE's initial width") {
+    // conf.numShufflePartitions returns coalescePartitions.initialPartitionNum
+    // under AQE, and an explicit repartition(n, …) is exempt from
+    // coalescing — so reading it ran every edge-scale stage at that width
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    spark.conf.set(key, "32")
+    try {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+      val p = simple("q110_triangle_count")
+      val widths = """hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM""".r
+        .findAllMatchIn(p).map(_.group(1).toInt).toSeq
+      assert(widths.length >= 3, s"expected q110's explicit repartitions:\n$p")
+      assert(widths.forall(_ == 4), s"explicit widths $widths:\n$p")
+    } finally spark.conf.unset(key)
+  }
+
   test("flagship entry returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -46,7 +46,7 @@ object AudioScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val clipLen = sys.env.getOrElse("SPARK_GRAFT_AU_LEN", "131072").toInt
     val hop = 64
-    val cpus = BenchHarness.envCpus()
+    val cpus = GraftSession.envCpus()
     // fat-blob reader posture: the vectorized parquet reader sizes
     // batches in ROWS (default 4096), and 4096 × ~262 KB WAV blobs is
     // ~1 GB PER TASK — 32 concurrent scan tasks OOM any sane heap

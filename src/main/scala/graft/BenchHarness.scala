@@ -11,24 +11,16 @@ import org.apache.spark.sql.SparkSession
   * the r11 checkpoint-contamination episode stayed invisible for three
   * rounds — this object exists so there is exactly one copy to fix.
   *
-  * The config block is [[GraftSession]]'s 100 TB posture plus the
-  * bench-host hygiene knobs, documented where they were earned:
-  *   - shuffles start 8× cores wide and AQE coalesces DOWN (the r12
-  *     500k-doc digest-sort spill: AQE merges partitions, never splits)
-  *   - status-store retention caps (task-data rows accumulate per task
-  *     even with the UI off; 8×-wide stages made that a real heap floor)
-  *   - ObjectHashAggregate sort-fallback at 2M keys (the stock 128 turns
-  *     collect-style aggs into external sorts), env-overridable via
-  *     `SPARK_GRAFT_OHA_FALLBACK` for A/B runs
-  *   - 64 MB broadcast threshold on the TIMED mains; `Verify` keeps
-  *     Spark's stock threshold (its job is correctness, and the smaller
-  *     default exercises the non-broadcast plans the oracle must match)
+  * The session is [[GraftSession.builder]]'s, at `SPARK_GRAFT_CPUS`
+  * cores, so every conf and its rationale lives in that one place; this
+  * object adds only what a measurement needs: the UI off, per-main
+  * `extraConfs` (`Verify` passes Spark's stock 10MB broadcast threshold:
+  * its job is correctness, and the smaller threshold exercises the
+  * non-broadcast plans the oracle must match), builder-time
+  * `SPARK_GRAFT_BUILDERCONF`, log level WARN and runtime
+  * `SPARK_GRAFT_SQLCONF`.
   */
 object BenchHarness {
-
-  /** `SPARK_GRAFT_CPUS`, with a per-main default (benches 32, Verify 4). */
-  def envCpus(default: Int = 32): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(default)
 
   /** Build the measurement session. Applies `SPARK_GRAFT_SQLCONF`
     * runtime confs (see [[applyEnvSqlConf]]) and sets log level WARN —
@@ -36,40 +28,10 @@ object BenchHarness {
     */
   def session(
       cpusDefault: Int = 32,
-      autoBroadcast64: Boolean = true,
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
-    val cpus = envCpus(cpusDefault)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus * 8).toString)
-      // post-shuffle sorts must FIT a task's execution-memory share —
-      // the 64 MB default advisory (compressed bytes; ~3-4× in memory)
-      // spill-stormed the 1M-doc digest sort (see GraftSession, r13:
-      // 205 s → 126 s = exactly linear, at 24 MB). share/6, clamped.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        math.min(64L << 20, math.max(16L << 20,
-          Runtime.getRuntime.maxMemory * 6 / 10 / cpus / 6)).toString)
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = GraftSession.envCpus(cpusDefault)
+    val b = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "2000000"))
-      // zstd shuffle/spill compression by default, matching
-      // GraftSession (r14 A/B: time-neutral at 2M docs, ~halves shuffle
-      // scratch — the 3M exact-substring point only fits under zstd).
-      // SPARK_GRAFT_IO_CODEC or a BUILDERCONF entry (applied later,
-      // later config wins) overrides for A/B.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-    val b2 =
-      if (autoBroadcast64)
-        b.config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      else b
     // SPARK_GRAFT_BUILDERCONF: like SPARK_GRAFT_SQLCONF but applied at
     // session BUILD time — for core confs (e.g. the shuffle compression
     // codec) that cannot change once the context exists. Same k=v;k=v
@@ -77,7 +39,7 @@ object BenchHarness {
     val builderConfs = sys.env.get("SPARK_GRAFT_BUILDERCONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k.trim, v.trim) }
-    val spark = (extraConfs.toSeq ++ builderConfs).foldLeft(b2) {
+    val spark = (extraConfs.toSeq ++ builderConfs).foldLeft(b) {
       case (bb, (k, v)) => bb.config(k, v)
     }.getOrCreate()
     // BUILDERCONF exists for confs that only bind at context creation
@@ -101,9 +63,9 @@ object BenchHarness {
 
   /** A/B aid, now available to EVERY main: `SPARK_GRAFT_SQLCONF=
     * "k=v;k=v"` applies runtime SQL confs (e.g.
-    * `spark.graft.exactSubstr.markViaAgg=true`) before any timing.
-    * Segments without '=' (or empty, e.g. a trailing ';') are skipped
-    * rather than MatchError-ing the run at startup.
+    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold=128`)
+    * before any timing. Segments without '=' (or empty, e.g. a trailing
+    * ';') are skipped rather than MatchError-ing the run at startup.
     */
   def applyEnvSqlConf(spark: SparkSession): Unit =
     sys.env.get("SPARK_GRAFT_SQLCONF").foreach(

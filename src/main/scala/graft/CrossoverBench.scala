@@ -30,7 +30,7 @@ object CrossoverBench {
     // whole corpus collapses into one component. 0.8 = 6.4σ ⇒ expected
     // spurious pairs ≪ 1 even at N=100k.
     val tau = 0.8
-    val cpus = BenchHarness.envCpus().toString
+    val cpus = GraftSession.envCpus().toString
     // shared measurement session + SPARK_GRAFT_SQLCONF A/B plumbing
     val spark = BenchHarness.session()
     graft.functions.CosineSim.register(spark)

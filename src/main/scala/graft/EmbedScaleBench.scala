@@ -46,7 +46,7 @@ object EmbedScaleBench {
     // its cosine either way); 0.9 keeps the survivor set dedup-shaped.
     val tau = 0.9
     val nprobe = 4
-    val cpus = BenchHarness.envCpus()
+    val cpus = GraftSession.envCpus()
     val spark = BenchHarness.session()
     import spark.implicits._
     import graft.operators.Similarity

@@ -8,12 +8,15 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  private def envCpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32)
+  /** `SPARK_GRAFT_CPUS`, or `default` when unset: the local core count
+    * every main sizes its master and shuffle width from.
+    */
+  def envCpus(default: Int = 32): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(default)
 
   def builder(
-      master: String = s"local[$envCpus]",
-      shufflePartitions: Int = envCpus): SparkSession.Builder =
+      master: String = s"local[${envCpus()}]",
+      shufflePartitions: Int = envCpus()): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -91,9 +94,8 @@ object GraftSession {
       // note_r14; BASELINE r14 #4). Core conf: binds at CONTEXT
       // creation only — a pre-existing session silently keeps its
       // codec (BenchHarness verifies its BUILDERCONF took; this
-      // default is best-effort by design). Env override for A/B.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
+      // default is best-effort by design).
+      .config("spark.io.compression.codec", "zstd")
       .config("spark.sql.session.timeZone", "UTC")
       // custom expressions (simhash64, minhash_sig, ngram_jaccard,
       // lang_id, cosine_sim) available in SQL everywhere. BOTH forms:

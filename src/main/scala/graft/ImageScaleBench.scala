@@ -32,7 +32,7 @@ object ImageScaleBench {
   def main(args: Array[String]): Unit = {
     val sizes = sys.env.getOrElse("SPARK_GRAFT_IM_NS", "100000,500000,1000000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = BenchHarness.envCpus()
+    val cpus = GraftSession.envCpus()
     val spark = BenchHarness.session()
     import spark.implicits._
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -8,9 +7,7 @@ import java.nio.file.{Files, Paths}
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
@@ -54,7 +51,7 @@ object PlanDump {
       "q129_triangle_approx" -> "sampled triangle estimate: md5 keep-gate inline in the edge scan, the SAME oriented merge-walk kernel on both branches, one-row attach",
       "q130_mp3_meta" -> "MP3 header walk: collect_list-bounded group payloads, per-group byte walk in a deterministic map, one agg shuffle",
       "q132_hybrid_rrf_topk" -> "truncated RRF: each arm a TakeOrderedAndProject (bounded heaps, no range exchange), full-outer fusion of two 200-row frames",
-      "q133_dup_substr_spans" -> "exact substring dedup: unhex(md5) window digests, ONE digest shuffle carries the dup count (window spelling won the r12 A/B; agg stays conf-selectable), per-doc gaps-and-islands merge",
+      "q133_dup_substr_spans" -> "exact substring dedup: unhex(md5) window digests, ONE digest shuffle carries the dup count (the window spelling, which won the r12 A/B), per-doc gaps-and-islands merge",
       "q134_dup_substr_cut" -> "span-cut apply: the same ONE digest shuffle carries count + keeper rank, co-partitioned stitch join back to the corpus",
       "q135_dsir_select" -> "DSIR: two corpus passes (bucket histogram broadcast back, per-doc integer log-ratio sum), Gumbel TakeOrdered top-k",
       "q136_pack_offsets" -> "concat-and-split packing: the range exchange runs ONCE inside the materialized sort (consumers read frozen blocks — no reuse dependence), no single-partition window",

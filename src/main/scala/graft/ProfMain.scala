@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 object ProfMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = BenchHarness.envCpus().toString
+    val cpus = GraftSession.envCpus().toString
     // shared measurement session + SPARK_GRAFT_SQLCONF A/B plumbing
     val spark = BenchHarness.session()
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generate a larger scale factor from an existing testdata dir by
@@ -32,14 +32,7 @@ object ScaleDataGen {
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchHarness.session()
 
     val shifts: Map[String, Seq[String]] = Map(
       "region" -> Nil,
@@ -61,7 +54,7 @@ object ScaleDataGen {
           spark.range(k.toLong).select(col("id").as("__rep")).crossJoin(df)) {
             (acc, c) => acc.withColumn(c, col(c) + col("__rep") * Shift)
           }.drop("__rep")
-      scaled.repartition(cpus.toInt)
+      scaled.repartition(GraftSession.envCpus())
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
       println(s"[scalegen] $t: ${df.count()} -> ${spark.read.parquet(s"$out/$t.parquet").count()}")
     }

@@ -27,7 +27,7 @@ object StreamScaleBench {
   def main(args: Array[String]): Unit = {
     val sizes = sys.env.getOrElse("SPARK_GRAFT_STREAM_NS", "200000,2000000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = BenchHarness.envCpus().toString
+    val cpus = GraftSession.envCpus().toString
     // shared measurement session + SPARK_GRAFT_SQLCONF A/B plumbing
     val spark = BenchHarness.session()
     import spark.implicits._

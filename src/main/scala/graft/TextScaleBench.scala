@@ -24,7 +24,7 @@ object TextScaleBench {
     // 32-wide sort spill and the mark-spelling reversal)
     val sizes = sys.env.getOrElse("SPARK_GRAFT_TEXT_NS", "5000,50000,200000,500000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = BenchHarness.envCpus().toString
+    val cpus = GraftSession.envCpus().toString
     // shared measurement session + SPARK_GRAFT_SQLCONF A/B plumbing
     val spark = BenchHarness.session()
 

@@ -8,8 +8,9 @@ object Verify {
     val Array(sfDir, outDir) = args
     // shared harness; Verify keeps Spark's STOCK broadcast threshold
     // (correctness runs exercise the non-broadcast plans too) and a
-    // 4-core default — the driver's compare host is small
-    val spark = BenchHarness.session(cpusDefault = 4, autoBroadcast64 = false)
+    // 4-core default — the compare host is small
+    val spark = BenchHarness.session(cpusDefault = 4,
+      extraConfs = Map("spark.sql.autoBroadcastJoinThreshold" -> "10MB"))
     new java.io.File(outDir).mkdirs()
     // Optional subset for local iteration (the driver sets no env):
     // SPARK_GRAFT_ONLY=q51,q52 runs only matching query names.

@@ -20,7 +20,7 @@ object WarehouseScaleBench {
   def main(args: Array[String]): Unit = {
     val ks = sys.env.getOrElse("SPARK_GRAFT_WH_KS", "1,8,40")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = BenchHarness.envCpus().toString
+    val cpus = GraftSession.envCpus().toString
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // shared measurement session + SPARK_GRAFT_SQLCONF A/B plumbing
     val spark = BenchHarness.session()

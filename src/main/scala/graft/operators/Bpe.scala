@@ -376,7 +376,7 @@ object Bpe {
     * `ranksOf` maps a pair to its SORTED rule ranks (a pair can in
     * principle be re-learned after re-emerging mid-training, so the
     * general form is a list). Non-BMP input is fine: [[baseSyms]]
-    * decomposes by code point, matching the Catalyst arm exactly.
+    * decomposes by code point, matching [[segment]] exactly.
     */
   private[operators] def segmentWordFast(
       w: String,
@@ -442,7 +442,7 @@ object Bpe {
     * dictionary joins back to the corpus' exploded word stream and one
     * per-document pass stitches the streams. Plan shape: one exploded
     * corpus pass → distinct (map-side combinable) → vocabulary-sized
-    * segmentation (the expensive fold runs per TYPE, not per
+    * segmentation (the per-word encoder runs per TYPE, not per
     * occurrence) → SHUFFLE_HASH dictionary join (the r11 broadcast-OOM
     * lesson: a "small" dictionary grows with vocabulary; shuffle-hash
     * keeps the build per-partition-sized at any corpus) → the
@@ -452,7 +452,7 @@ object Bpe {
     * the 200k-doc TEXTSCALE point; the fold holds exactly one
     * document's id stream at a time over a spillable sort. The id map
     * itself is fixture-sized (vocab of the FROZEN tokenizer, not the
-    * corpus) and compiles into the plan as a literal map.
+    * corpus) and rides one broadcast with the merge table.
     */
   def encode(
       corpus: DataFrame,
@@ -465,46 +465,25 @@ object Bpe {
       .select(col(idCol),
         posexplode(split(col(textCol), " ")).as(Seq("__pos", "__w")))
       .filter(length(col("__w")) > 0)
-    // dictionary arm: default = segmentWordFast (rule-count-independent;
-    // the fold arm pays one checkpointed dictionary pass per 32 rules —
-    // 250 Spark jobs per encode at the 8k-rule fixture). Measured at
-    // sf0.1 under the frozen 8,000-merge fixture: fold 49.3 s/encode vs
-    // 0.71 s fast (70x) — the fold's linear-in-rules job count is the
-    // scale flaw the r12 verdict predicted ("unproven past 96 rules").
-    // The fold stays config-selectable for A/B and as the all-Catalyst
-    // spelling; both are property-spec'd bit-identical.
-    val useFold =
-      spark.conf.getOption("spark.graft.bpe.foldSegment").contains("true")
-    val dict =
-      if (useFold) {
-        val (toks, ids) = idOf.toSeq.sorted.unzip
-        val idMap = map_from_arrays(
-          lit(toks.toArray), lit(ids.map(_.toLong).toArray))
-        segment(words.select(col("__w")).distinct(), "__w", merges)
-          .select(
-            col("__w"),
-            size(col("bpe_tokens")).cast("long").as("__n"),
-            array_join(
-              transform(col("bpe_tokens"),
-                t => coalesce(element_at(idMap, t), lit(-1L)).cast("string")),
-              " ").as("__ids"))
-      } else {
-        // the merge table + id vocab ride one broadcast (fixture-sized),
-        // not a per-task closure copy
-        val bc = spark.sparkContext.broadcast(
-          (merges.toIndexedSeq, mergeRanks(merges), idOf))
-        import spark.implicits._
-        words.select(col("__w")).distinct().as[String]
-          .mapPartitions { it =>
-            val (m, ranks, ids) = bc.value
-            it.map { w =>
-              val toks = segmentWordFast(w, m, ranks)
-              (w, toks.length.toLong,
-                toks.iterator
-                  .map(t => ids.getOrElse(t, -1).toString).mkString(" "))
-            }
-          }.toDF("__w", "__n", "__ids")
-      }
+    // the dictionary is segmented by segmentWordFast, whose cost is
+    // independent of the rule count: the Catalyst fold ([[segment]])
+    // pays one checkpointed dictionary pass per 32 rules and measured
+    // 49.3 s/encode against 0.71 s (70x) at sf0.1 under the frozen
+    // 8,000-merge fixture. The merge table + id vocab ride one broadcast
+    // (fixture-sized), not a per-task closure copy.
+    val bc = spark.sparkContext.broadcast(
+      (merges.toIndexedSeq, mergeRanks(merges), idOf))
+    import spark.implicits._
+    val dict = words.select(col("__w")).distinct().as[String]
+      .mapPartitions { it =>
+        val (m, ranks, ids) = bc.value
+        it.map { w =>
+          val toks = segmentWordFast(w, m, ranks)
+          (w, toks.length.toLong,
+            toks.iterator
+              .map(t => ids.getOrElse(t, -1).toString).mkString(" "))
+        }
+      }.toDF("__w", "__n", "__ids")
     val joined = words
       .join(dict.hint("shuffle_hash"), Seq("__w"))
       .select(col(idCol), col("__pos"), col("__n"), col("__ids"))

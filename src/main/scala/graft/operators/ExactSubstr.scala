@@ -246,45 +246,18 @@ object ExactSubstr {
   }
 
   /** Mark stage: the (id, pos) rows whose window digest occurs ≥ 2
-    * times corpus-wide. Two spellings (r10 verdict #8 / r11 verdict #4),
-    * `spark.graft.exactSubstr.markViaAgg` selects:
-    *
-    *  - `window` (default): count over a digest-partitioned window —
-    *    ONE corpus shuffle carries the whole decision; the window exec
-    *    sorts each partition by the 16-byte digest.
-    *  - `agg`: map-side-combinable count per digest → filter ≥ 2 →
-    *    semi-join back. No corpus-sized sort — but the corpus pays a
-    *    SECOND pass (the join arm re-reads every window row) and the
-    *    dup-digest build side is only small when duplication is rare.
-    *
-    * Measured, r12, interleaved processes under right-sized shuffles
-    * (AQE initialPartitionNum = 8× cores — the r11 A/B ran 32-wide
-    * where BOTH arms spilled, read agg ahead within noise, and does not
-    * reproduce): 200k docs / ~49M windows: q133 window 20.9 s vs agg
-    * 23.3 s; 500k / ~123M: 47.3 s vs 58.4 s — window wins and the gap
-    * WIDENS with scale on this corpus, whose Zipf text duplicates a
-    * large fraction of digests (the join arm's build side is
-    * corpus-fraction-sized, nothing is broadcastable). The agg spelling
-    * stays selectable for low-duplication corpora (boilerplate ≪ 1% of
-    * windows), where its build side collapses to broadcast size and the
-    * second scan is the only cost.
+    * times corpus-wide, counted over a digest-partitioned window — ONE
+    * corpus shuffle carries the whole decision. The window is the only
+    * spelling because it beat a count-per-digest + semi-join spelling at
+    * every measured point (r12, interleaved: q133 200k docs 20.9 s vs
+    * 23.3 s, 500k 47.3 s vs 58.4 s), whose second corpus pass and
+    * corpus-fraction-sized build side grow with duplication.
     */
-  private def markDuplicated(wins: DataFrame): DataFrame = {
-    val viaAgg =
-      try wins.sparkSession.conf.get("spark.graft.exactSubstr.markViaAgg").toBoolean
-      catch { case _: java.util.NoSuchElementException => false }
-    if (viaAgg) {
-      val dupH = wins.groupBy(col("__h"))
-        .agg(count(lit(1)).as("__cnt"))
-        .filter(col("__cnt") >= 2)
-        .select(col("__h"))
-      wins.join(dupH, Seq("__h"), "left_semi").select(col("__id"), col("pos"))
-    } else
-      wins
-        .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__h"))))
-        .filter(col("__cnt") >= 2)
-        .select(col("__id"), col("pos"))
-  }
+  private def markDuplicated(wins: DataFrame): DataFrame =
+    wins
+      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__h"))))
+      .filter(col("__cnt") >= 2)
+      .select(col("__id"), col("pos"))
 
   /** The APPLY stage (Lee et al. §3: remove duplicated text, keep one
     * copy): the deduplicated corpus `(id, text_dedup, n_spans_cut,
@@ -326,49 +299,22 @@ object ExactSubstr {
     require(L >= 2, s"minLen must be >= 2, got $L")
     val wins = windowDigests(df, idCol, textCol, L)
     // Keeper decision — duplicated at all (count ≥ 2) and keeper
-    // (min (id, pos)) — in the same two spellings as [[markDuplicated]],
-    // selected by the same `spark.graft.exactSubstr.markViaAgg` conf
-    // (r11 verdict #4 asked for the agg respell of the keeper rank; it
-    // exists below and was A/B'd — and the WINDOW spelling won):
-    //
-    //  - window (default): count + row_number over the digest window —
-    //    ONE corpus shuffle carries both decisions. Measured r12,
-    //    interleaved under right-sized shuffles (see markDuplicated):
-    //    q134 200k: window 23.5 s vs agg 28.9 s; 500k: 57.4 s vs
-    //    116.8 s. The agg arm's keeper join re-shuffles all ~123M
-    //    window rows against a corpus-fraction-sized build (this
-    //    corpus duplicates a large share of digests) and loses 2× at
-    //    the upper decade.
-    //  - agg: (count, min-struct) per digest → filter ≥ 2 → join back,
-    //    keeping non-keeper occurrences — the right spelling only for
-    //    low-duplication corpora where the build side broadcasts.
-    val viaAgg =
-      try df.sparkSession.conf.get("spark.graft.exactSubstr.markViaAgg").toBoolean
-      catch { case _: java.util.NoSuchElementException => false }
-    // keeper + cut are per-DIGEST decisions, so they slice cleanly into
-    // digest-space passes (multiPass): every occurrence of a window is
-    // in the same pass as its keeper
-    def cutStage(w: DataFrame): DataFrame =
-      if (viaAgg) {
-        val keep = w.groupBy(col("__h"))
-          .agg(
-            count(lit(1)).as("__cnt"),
-            min(struct(col("__id"), col("pos"))).as("__keep"))
-          .filter(col("__cnt") >= 2)
-          .select(col("__h"), col("__keep"))
-        w.join(keep, Seq("__h"))
-          .filter(
-            col("__id") =!= col("__keep.__id") || col("pos") =!= col("__keep.pos"))
-          .select(col("__id"), col("pos"))
-      } else {
-        val byDigest = Window.partitionBy(col("__h"))
-        w
-          .withColumn("__cnt", count(lit(1)).over(byDigest))
-          .withColumn("__rk",
-            row_number().over(byDigest.orderBy(col("__id"), col("pos"))))
-          .filter(col("__cnt") >= 2 && col("__rk") > 1)
-          .select(col("__id"), col("pos"))
-      }
+    // (min (id, pos)) — as count + row_number over the digest window:
+    // ONE corpus shuffle carries both decisions. It beat a
+    // (count, min-struct)-per-digest + join-back spelling at every
+    // measured point (r12, interleaved: q134 200k docs 23.5 s vs 28.9 s,
+    // 500k 57.4 s vs 116.8 s). Keeper + cut are per-DIGEST decisions, so
+    // they slice cleanly into digest-space passes (multiPass): every
+    // occurrence of a window is in the same pass as its keeper.
+    def cutStage(w: DataFrame): DataFrame = {
+      val byDigest = Window.partitionBy(col("__h"))
+      w
+        .withColumn("__cnt", count(lit(1)).over(byDigest))
+        .withColumn("__rk",
+          row_number().over(byDigest.orderBy(col("__id"), col("pos"))))
+        .filter(col("__cnt") >= 2 && col("__rk") > 1)
+        .select(col("__id"), col("pos"))
+    }
     val cut = multiPass(wins, digestPasses(df))(cutStage)
     val byDoc = Window.partitionBy(col("__id")).orderBy(col("pos"))
     val spans = cut

@@ -32,9 +32,11 @@ object CandyRun {
           endDate = LocalDate.parse(args(3), fmt))
       }
 
+    // one core count sizes both the local master and the shuffle width
+    val cpus = graft.GraftSession.envCpus(8)
     val spark = graft.GraftSession.builder(
-      master = sys.env.getOrElse(
-        "SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
+      master = sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"),
+      shufflePartitions = cpus)
       .appName("candy-store-etl")
       .getOrCreate()
     // stopped on every path: the caller's JVM may build another session,

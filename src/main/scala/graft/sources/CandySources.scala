@@ -24,8 +24,15 @@ object CandySources {
 
   private val dayFmt = DateTimeFormatter.ofPattern("yyyyMMdd")
 
-  def dateRange(start: LocalDate, endInclusive: LocalDate): Seq[LocalDate] =
+  /** The days `start..endInclusive`. Both transaction sources read their
+    * days from here, so an inverted range fails on the driver before any
+    * Spark job, naming both dates.
+    */
+  def dateRange(start: LocalDate, endInclusive: LocalDate): Seq[LocalDate] = {
+    require(!endInclusive.isBefore(start),
+      s"date range inverted: end $endInclusive is before start $start")
     Iterator.iterate(start)(_.plusDays(1)).takeWhile(!_.isAfter(endInclusive)).toSeq
+  }
 
   /** One day's transactions with a deterministic physical order.
     *

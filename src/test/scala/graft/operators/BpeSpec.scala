@@ -352,14 +352,16 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     assert(Bpe.baseSyms("😀") ==
       Seq("<0xF0>", "<0x9F>", "<0x98>", "<0x80>"))
     assert(!Bpe.baseSyms("a𠜎b").contains("<0x3F>"))
-    // all three encode spellings agree
-    def run() = Bpe.encode(df, "doc_id", "text", m.merges.take(64), m.idOf)
+    // all three spellings agree: the fast encoder, the Catalyst fold
+    // (Bpe.segment over the distinct words) and the per-word reference
+    val fast = Bpe.encode(df, "doc_id", "text", m.merges.take(64), m.idOf)
       .select("doc_id", "n_tokens", "bpe_ids")
       .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-    val fast = run()
-    spark.conf.set("spark.graft.bpe.foldSegment", "true")
-    val fold = try run() finally spark.conf.unset("spark.graft.bpe.foldSegment")
-    assert(fold == fast)
+    val words = texts.flatMap(_._2.split(" ").filter(_.nonEmpty)).distinct
+    val fold = Bpe.segment(words.toDF("w"), "w", m.merges.take(64))
+      .select($"w", $"bpe_tokens").as[(String, Seq[String])].collect().toMap
+    words.foreach(w => assert(fold(w) == refEncodeWord(w, m.merges.take(64)),
+      s"fold diverges on '$w'"))
     val want = texts.map { case (id, t) =>
       val toks = t.split(" ").filter(_.nonEmpty).toSeq
         .flatMap(w => refEncodeWord(w, m.merges.take(64)))
@@ -376,26 +378,6 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
       val expect = t.split(" ").filter(_.nonEmpty).mkString(" ")
       assert(dec(id) === ((0L, expect)), s"doc $id: '$t'")
     }
-  }
-
-  test("encode's Catalyst-fold arm (spark.graft.bpe.foldSegment) is " +
-    "bit-identical to the fast sequential encoder, including byte fallback") {
-    import spark.implicits._
-    val m = graft.model.BpeMerges
-    val df = Seq(
-      (1L, "the slow merge window"),
-      (2L, "naïve café ¡mixed! 東京 w42"),
-      (3L, "value über straße"))
-      .toDF("doc_id", "text")
-    def run() = Bpe.encode(df, "doc_id", "text", m.merges.take(64), m.idOf)
-      .select("doc_id", "n_tokens", "bpe_ids")
-      .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-    val fast = run()
-    spark.conf.set("spark.graft.bpe.foldSegment", "true")
-    try {
-      val fold = run()
-      assert(fold == fast)
-    } finally spark.conf.unset("spark.graft.bpe.foldSegment")
   }
 
   test("decode is robust to legacy -1 ids and renders them as '?'") {

@@ -114,22 +114,8 @@ class ExactSubstrSpec extends AnyFunSuite with SparkTestBase {
       "within-doc repeat keeps its first copy only")
   }
 
-  test("both mark spellings (window default / agg selectable) are " +
-    "bit-identical, spans and cut, on the real sf0.001 documents table") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def all(): (Set[(Long, Long, Long, Long)], Set[(Long, String, Long, Long)]) = (
-      ExactSubstr.duplicateSpans(docs, "doc_id", "text", minLen = 50)
-        .as[(Long, Long, Long, Long)].collect().toSet,
-      ExactSubstr.cutDuplicateSpans(docs, "doc_id", "text", minLen = 50)
-        .as[(Long, String, Long, Long)].collect().toSet)
-    val win = all() // default: window
-    spark.conf.set("spark.graft.exactSubstr.markViaAgg", "true")
-    try assert(all() == win, "agg spelling diverged from window spelling")
-    finally spark.conf.unset("spark.graft.exactSubstr.markViaAgg")
-  }
-
   test("digest-space multi-pass (passes = 3) is bit-identical to " +
-    "single-pass, spans and cut, both mark spellings (sf0.001)") {
+    "single-pass, spans and cut (sf0.001)") {
     // the scratch-bound mode (r14 verdict #1): pmod(hash(digest), K)
     // slices the digest space; exactness rests on every occurrence of
     // a window sharing its digest and therefore its pass — this pins
@@ -143,13 +129,8 @@ class ExactSubstrSpec extends AnyFunSuite with SparkTestBase {
     val single = all()
     assert(single._1.nonEmpty, "fixture has no duplicates — test is vacuous")
     spark.conf.set("spark.graft.exactSubstr.passes", "3")
-    try {
-      assert(all() == single, "multi-pass diverged from single-pass")
-      spark.conf.set("spark.graft.exactSubstr.markViaAgg", "true")
-      try assert(all() == single,
-        "multi-pass agg spelling diverged from single-pass")
-      finally spark.conf.unset("spark.graft.exactSubstr.markViaAgg")
-    } finally spark.conf.unset("spark.graft.exactSubstr.passes")
+    try assert(all() == single, "multi-pass diverged from single-pass")
+    finally spark.conf.unset("spark.graft.exactSubstr.passes")
   }
 
   test("sizePasses: both regimes of the scratch provisioning rule, " +

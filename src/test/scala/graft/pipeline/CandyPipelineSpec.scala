@@ -75,16 +75,22 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     try {
       val r = new CandyPipeline(spark, dataDir.toString, outDir.toString,
         LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run()
-      // the bus delivers in order: once the sentinel job is seen, every
-      // event the run posted has been seen too
-      spark.sparkContext.setJobGroup(sentinelGroup, "sentinel")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!events.synchronized(events.exists(isSentinel)) && System.nanoTime() < deadline)
-        Thread.sleep(10)
+      runSentinel(events)
       r
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Run the sentinel job and wait until `seen` holds its start. The bus
+    * delivers in order: once the sentinel job is seen, every event posted
+    * before it has been seen too.
+    */
+  private def runSentinel(seen: ArrayBuffer[_ <: SparkListenerEvent]): Unit = {
+    spark.sparkContext.setJobGroup(sentinelGroup, "sentinel")
+    try spark.sparkContext.parallelize(Seq(1), 1).count()
+    finally spark.sparkContext.clearJobGroup()
+    val deadline = System.nanoTime() + 30000000000L
+    while (!seen.synchronized(seen.exists(isSentinel)) && System.nanoTime() < deadline)
+      Thread.sleep(10)
   }
 
   private def isSentinel(e: SparkListenerEvent): Boolean = e match {
@@ -163,5 +169,26 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(lastWriteEnd >= 0 && lastWriteEnd < sentinel)
     val after = seen.slice(lastWriteEnd + 1, sentinel).collect { case j: SparkListenerJobStart => j.jobId }
     assert(after.isEmpty, s"jobs $after started after the forecast write")
+  }
+
+  test("inverted date range: fails before any Spark job, names both dates") {
+    val jobs = ArrayBuffer.empty[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized(jobs += e)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Files.createTempDirectory("candy_inverted")
+      out.toFile.deleteOnExit()
+      val e = intercept[IllegalArgumentException] {
+        new CandyPipeline(spark, dataDir.toString, out.toString,
+          LocalDate.of(2024, 3, 2), LocalDate.of(2024, 3, 1)).run()
+      }
+      assert(e.getMessage.contains("2024-03-02") && e.getMessage.contains("2024-03-01"))
+      runSentinel(jobs)
+      val seen = jobs.synchronized(jobs.toList)
+      assert(seen.exists(isSentinel), "sentinel job never reached the listener")
+      assert(seen.forall(isSentinel), s"jobs ${seen.map(_.jobId)} started before the failure")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -58,6 +58,17 @@ object GraftSession {
         math.min(64L << 20, math.max(16L << 20,
           Runtime.getRuntime.maxMemory * 6 / 10 / shufflePartitions / 6))
           .toString)
+      // Let AQE coalesce the final shuffle of a PERSISTED plan too. At the
+      // false default a cached plan keeps the 8× initial width above: the
+      // candy job's persisted `allocated` frame (~1 MB) ran five 32-task
+      // stages on 4 cores, 160 of an operation's 205 tasks. Coalescing
+      // only merges whole hash partitions, so a key's rows still meet in
+      // one task, and explicit `repartition(n, …)` (REPARTITION_BY_NUM) is
+      // never coalesced, so layouts built that way (ConnectedComponents'
+      // symmetric relation) are kept. Measured on a 4-core host, with the
+      // one-scan candy source: 205 → 32 tasks per candy operation, and
+      // the benchmark's candy cpu_s 13.3 → 7.9 s (10 interleaved pairs).
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // The status store retains job/stage/task/SQL-metric rows even
       // with the UI disabled, and its growth scales with TASK COUNT —
       // 8×-wide initial stages × a long query sweep accumulated

@@ -110,10 +110,16 @@ object ConnectedComponents {
     // probe's one-row aggregate. persist(), not localCheckpoint: a
     // LogicalRDD forgets outputPartitioning (measured: the checkpointed
     // round kept its groupBy exchange), while InMemoryRelation preserves
-    // the cached plan's layout (canChangeCachedPlanOutputPartitioning
-    // stays at its false default). Cost: the union is stored once
-    // (2|E|+|V| rows) instead of read lazily off the ck blocks — the
-    // storage-for-shuffles trade only taken when it pays every round.
+    // the cached plan's layout. GraftSession turns
+    // canChangeCachedPlanOutputPartitioning on, so AQE may coalesce a
+    // persisted plan's final shuffle; the layout still holds because an
+    // explicit repartition(nSym, src) is REPARTITION_BY_NUM, which AQE
+    // never coalesces (measured: q50, q82, q94 at sf0.1 on 4 cores,
+    // three JVMs per arm, conf off vs on: 615 jobs, 615 stages and 894
+    // tasks in every run, totals 10.9-12.5 s vs 11.6-12.6 s). Cost: the
+    // union is stored once (2|E|+|V| rows) instead of read lazily off the
+    // ck blocks — the storage-for-shuffles trade only taken when it pays
+    // every round.
     // Partition count is scale-adaptive (guide §2): derived from the
     // measured checkpoint bytes against the session's advisory partition
     // size, so a small graph runs 1-task rounds (what AQE coalescing

@@ -17,7 +17,7 @@ import scala.collection.immutable.ListMap
   * producing the five reports of SURVEY.md §1.2 as single-file CSVs.
   *
   * Structural fixes over the reference, besides the distributed allocator:
-  * every transaction day is read ONCE and persisted (the reference re-scans
+  * the date range is read in ONE scan and persisted (the reference re-scans
   * MongoDB per day in both EP1 and EP2, data_processor.py:176,310-313), and
   * there is no per-day driver round-trip — the whole date range is one
   * lineage.

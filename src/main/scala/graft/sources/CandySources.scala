@@ -34,37 +34,43 @@ object CandySources {
     Iterator.iterate(start)(_.plusDays(1)).takeWhile(!_.isAfter(endInclusive)).toSeq
   }
 
-  /** One day's transactions with a deterministic physical order.
+  /** All days in [start, end] in one multiLine scan, each row tagged with
+    * its business day and a deterministic physical order (U1).
     *
-    * Each fixture file is a single JSON *array* (multiLine); a single file
-    * read lands in one input partition, so `monotonically_increasing_id`
-    * numbers rows 0..n-1 in array order. That `tx_seq` + the items' array
-    * position (via `posexplode` downstream) reconstruct the reference's
-    * processing order — which its golden outputs depend on (the greedy
-    * allocator is order-sensitive, SURVEY.md §2.8).
+    * Each fixture file is a single JSON *array* (multiLine), and a
+    * multiLine file is never split, so one scan over the range's day files
+    * keeps every file whole within one input partition. Small files may
+    * share a partition; `monotonically_increasing_id` then still numbers
+    * each file's rows in array order, so `tx_seq` increases within a file
+    * (not densely, and not across files). `day_idx` is looked up from the
+    * row's own `_metadata.file_name` in a literal file-name → epoch-day
+    * map — exact, no pattern parsing. Allocation orders by
+    * (day_idx, tx_seq, item_pos), so only the order within a day matters:
+    * `tx_seq` + the items' array position (via `posexplode` downstream)
+    * reconstruct the reference's processing order, which its golden
+    * outputs depend on (the greedy allocator is order-sensitive,
+    * SURVEY.md §2.8). A missing day file fails when the read is planned,
+    * on the driver, naming the path.
     *
     * Scale note: per-day order is only needed for bit-parity with the
     * reference's goldens. At 100 TB the order column would be a real field
     * (event time / sequence number) and this source becomes a plain
     * parallel scan of `.../date=yyyyMMdd/` with partition pruning.
     */
-  def transactionsDay(spark: SparkSession, dataDir: String, day: LocalDate): DataFrame =
-    spark.read
-      .schema(CandyModel.transactionSchema)
-      .option("multiLine", "true")
-      .json(s"$dataDir/transactions_${day.format(dayFmt)}.json")
-      .withColumn("tx_seq", monotonically_increasing_id())
-      .withColumn("day_idx", lit(day.toEpochDay))
-
-  /** All days in [start, end], unioned with their day index (U1). */
   def transactions(
       spark: SparkSession,
       dataDir: String,
       start: LocalDate,
-      endInclusive: LocalDate): DataFrame =
-    dateRange(start, endInclusive)
-      .map(transactionsDay(spark, dataDir, _))
-      .reduce(_ union _)
+      endInclusive: LocalDate): DataFrame = {
+    val days = dateRange(start, endInclusive)
+      .map(d => s"transactions_${d.format(dayFmt)}.json" -> d.toEpochDay)
+    spark.read
+      .schema(CandyModel.transactionSchema)
+      .option("multiLine", "true")
+      .json(days.map { case (file, _) => s"$dataDir/$file" }: _*)
+      .withColumn("tx_seq", monotonically_increasing_id())
+      .withColumn("day_idx", element_at(typedLit(days.toMap), col("_metadata.file_name")))
+  }
 
   /** Options for the day-collection MongoDB read, factored out so the
     * composition is testable without a server: URI, database (with the
@@ -92,8 +98,8 @@ object CandySources {
     * reference's `MYSQL_CONNECTOR_PATH`). `tx_seq` here numbers rows in
     * ARRIVAL order, which a Mongo cursor does not guarantee across
     * partitions; at production scale the processing order must be a real
-    * field (see [[transactionsDay]]'s scale note), so the decoration is
-    * kept only for API parity with the fixture path.
+    * field (see the scale note on the file-backed `transactions`), so the
+    * decoration is kept only for API parity with the fixture path.
     */
   def transactionsDayMongo(
       spark: SparkSession,
@@ -107,8 +113,9 @@ object CandySources {
       .withColumn("day_idx", lit(day.toEpochDay))
 
   /** All days via the configured transaction source: live MongoDB when
-    * `cfg.mongoTransactions`, JSON fixtures otherwise. The date range is
-    * an explicit parameter (not read from cfg) so both branches of the
+    * `cfg.mongoTransactions` (one collection per day, unioned), the
+    * file-backed one-scan `transactions` otherwise. The date range is an
+    * explicit parameter (not read from cfg) so both branches of the
     * pipeline's source selection honor the SAME constructor-supplied
     * range — `CandyPipeline(spark, dir, out, d1, d2, ...)` must process
     * d1..d2 regardless of what cfg.startDate/endDate say.
@@ -118,11 +125,9 @@ object CandySources {
       cfg: graft.pipeline.CandyConfig,
       start: LocalDate,
       endInclusive: LocalDate): DataFrame =
-    dateRange(start, endInclusive)
-      .map(day =>
-        if (cfg.mongoTransactions) transactionsDayMongo(spark, cfg, day)
-        else transactionsDay(spark, cfg.dataDir, day))
-      .reduce(_ union _)
+    if (cfg.mongoTransactions)
+      dateRange(start, endInclusive).map(transactionsDayMongo(spark, cfg, _)).reduce(_ union _)
+    else transactions(spark, cfg.dataDir, start, endInclusive)
 
   /** products dimension from CSV fixture (prod: JDBC). */
   def products(spark: SparkSession, dataDir: String): DataFrame =

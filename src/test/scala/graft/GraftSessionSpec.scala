@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,6 +48,8 @@ class GraftSessionSpec extends AnyFunSuite {
         "2000000")
       assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "64MB")
       assert(spark.conf.get("spark.ui.enabled") == "false")
+      assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") ==
+        "true")
       // the SQL extension functions resolve (GraftSession's extensions)
       val row = spark.sql(
         "SELECT simhash64('a b') AS s, cosine_sim(array(1.0D), array(1.0D)) AS c")
@@ -57,33 +60,41 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("builder wires tuned defaults and the SQL extension functions") {
+    // Run alone, this test starts the JVM's context (local[2], with
+    // `spark.sql.extensions` in its SparkConf); stop it then, so later
+    // suites do not reuse it. A context that was already running stays.
+    val ownsContext = SparkEnv.get == null
     withoutActiveSession {
       val spark = GraftSession.builder(master = "local[2]", shufflePartitions = 2)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-      assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "64MB")
-      // all custom functions resolve through pure SQL (extensions path)
-      val row = spark.sql(
-        """SELECT simhash64('a b') AS s,
-          |size(minhash_sig('abcdef', 8, 3)) AS m,
-          |ngram_jaccard('abc', 'abc', 2) AS j,
-          |lang_id('the of and') AS l,
-          |cosine_sim(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c,
-          |word_ngrams('a b a b', 2, true) AS w,
-          |word_chunks('a b c', 2, 2) AS ch,
-          |normalize_text('  A  B ') AS nt,
-          |cms_estimate(count_min_sketch(CAST(7 AS BIGINT), 0.001d, 0.99d, 1), CAST(7 AS BIGINT)) AS ce""".stripMargin)
-        .collect()(0)
-      assert(row.getInt(1) == 8)
-      assert(row.getDouble(2) == 1.0)
-      assert(row.getString(3) == "en")
-      assert(row.getDouble(4) == 0.0)
-      assert(row.getSeq[String](5) == Seq("a b", "b a"))
-      assert(row.getSeq[String](6) == Seq("a b", "c"))
-      assert(row.getString(7) == "a b")
-      assert(row.getLong(8) == 1L)
+      try {
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
+        assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+        assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "64MB")
+        assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") ==
+          "true")
+        // all custom functions resolve through pure SQL (extensions path)
+        val row = spark.sql(
+          """SELECT simhash64('a b') AS s,
+            |size(minhash_sig('abcdef', 8, 3)) AS m,
+            |ngram_jaccard('abc', 'abc', 2) AS j,
+            |lang_id('the of and') AS l,
+            |cosine_sim(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c,
+            |word_ngrams('a b a b', 2, true) AS w,
+            |word_chunks('a b c', 2, 2) AS ch,
+            |normalize_text('  A  B ') AS nt,
+            |cms_estimate(count_min_sketch(CAST(7 AS BIGINT), 0.001d, 0.99d, 1), CAST(7 AS BIGINT)) AS ce""".stripMargin)
+          .collect()(0)
+        assert(row.getInt(1) == 8)
+        assert(row.getDouble(2) == 1.0)
+        assert(row.getString(3) == "en")
+        assert(row.getDouble(4) == 0.0)
+        assert(row.getSeq[String](5) == Seq("a b", "b a"))
+        assert(row.getSeq[String](6) == Seq("a b", "c"))
+        assert(row.getString(7) == "a b")
+        assert(row.getLong(8) == 1L)
+      } finally if (ownsContext) spark.stop()
     }
   }
 

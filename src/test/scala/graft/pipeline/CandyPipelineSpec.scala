@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -190,5 +190,36 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
       assert(seen.exists(isSentinel), "sentinel job never reached the listener")
       assert(seen.forall(isSentinel), s"jobs ${seen.map(_.jobId)} started before the failure")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("every stage runs at most shuffle.partitions tasks when shuffles start 8× wide") {
+    // GraftSession's shuffle start width (8× the 4 shuffle partitions)
+    // and its cache conf (GraftSessionSpec pins the value): persisted
+    // frames must coalesce like any other shuffle, or the allocation's
+    // stages run 32 tasks on a few KB
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
+    wide.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    val maxTasks = wide.conf.get("spark.sql.shuffle.partitions").toInt
+    val want = result.rowsWritten
+    val seen = ArrayBuffer.empty[SparkListenerEvent]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized(seen += e)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        seen.synchronized(seen += e)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Files.createTempDirectory("candy_wide")
+      out.toFile.deleteOnExit()
+      val r = new CandyPipeline(wide, dataDir.toString, out.toString,
+        LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run()
+      assert(r.rowsWritten == want)
+      runSentinel(seen)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val stages = seen.synchronized(seen.toList).collect { case s: SparkListenerStageSubmitted => s.stageInfo }
+    assert(stages.nonEmpty, "no stage reached the listener")
+    val wideStages = stages.filter(_.numTasks > maxTasks).map(s => s"${s.stageId}:${s.name}=${s.numTasks}")
+    assert(wideStages.isEmpty, s"stages over $maxTasks tasks: $wideStages")
   }
 }

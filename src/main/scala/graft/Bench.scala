@@ -15,16 +15,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the shared measurement session (BenchHarness: 8x-wide shuffle
     // start, status-store caps, env-overridable OHA fallback, and —
-    // new in r13 — SPARK_GRAFT_SQLCONF A/B plumbing in this main too)
-    val spark = BenchHarness.session()
-
-    // bench prices the PRODUCTION arm of q129: the in-plan exact
+    // new in r13 — SPARK_GRAFT_SQLCONF A/B plumbing in this main too).
+    // Bench prices the PRODUCTION arm of q129: the in-plan exact
     // O(E^1.5) yardstick stays on for Verify/oracle runs (where the
     // error envelope must be CHECKED), but a 100 TB deployment runs
     // only the sampled estimator — GRAPHSCALE.json records both arms
-    // (q110 = exact kernel, tri_sampled_kernel = sampled schedule)
-    spark.conf.set("spark.graft.triangle.exactYardstick",
-      sys.env.getOrElse("SPARK_GRAFT_TRI_EXACT", "false"))
+    // (q110 = exact kernel, tri_sampled_kernel = sampled schedule). It
+    // is a session default, so a SPARK_GRAFT_SQLCONF value still wins.
+    val spark = BenchHarness.session(
+      extraConfs = Map("spark.graft.triangle.exactYardstick" -> "false"))
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -90,8 +89,8 @@ object Bench {
         // triggers — shuffle-file unlinks, broadcast-removal RPCs — runs
         // ASYNC and lands inside the NEXT sample's window; measured as a
         // uniform ~+0.1 s per sample (sum of medians 71.7 → ~102 s).
-        // TextScaleBench keeps its inter-QUERY gc because its multi-point
-        // sweep OOMs without it and its queries are seconds-long; this
+        // ScaleSweep keeps its inter-arm gc (BenchHarness.quiesce) because
+        // the text sweep OOMs without it and its arms are seconds-long; this
         // bench's 143×3 sub-second samples cannot afford the cleaner
         // echo, and the status-store retention caps already bound the
         // only accumulation this JVM showed.

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE measurement-session harness every bench/verify main shares
   * (r12 verdict #7): session setup, `SPARK_GRAFT_SQLCONF` A/B plumbing,
-  * env subset filters, and the between-query unpersist discipline
-  * previously copy-pasted across `Bench`/`TextScaleBench`/
-  * `StreamScaleBench`/the four scale benches/`Verify`/`ProfMain`. A
+  * env subset filters, and the between-query unpersist discipline. Its
+  * callers are `Bench`, `ScaleSweep` (every scale family), `Verify`,
+  * `ProfMain`, `PlanSnap`, `ScaleDataGen` and perfbench's `Leg`. A
   * measurement-harness bug fixed in one copy and not the others is how
   * the r11 checkpoint-contamination episode stayed invisible for three
   * rounds — this object exists so there is exactly one copy to fix.
@@ -96,8 +96,8 @@ object BenchHarness {
     * shuffle-file unlinks, broadcast-removal RPCs — runs ASYNC and lands
     * inside the NEXT sample (r12: a uniform ~+0.1 s per sub-second
     * sample). Sweeps whose per-point working set OOMs without a forced
-    * collection (TextScaleBench's multi-hundred-MB points) add their own
-    * gc at the call site, where the regime is documented.
+    * collection (the text sweep's multi-hundred-MB points) call
+    * [[quiesce]], which adds it.
     */
   def dropCheckpointBlocks(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

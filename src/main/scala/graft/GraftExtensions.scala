@@ -3,73 +3,38 @@ package graft
 import graft.functions.{CmsEstimate, CosineSim, LangId, MinHashSig, NGramJaccard, NormalizeText, RollingChunks, SimHash64, WordChunks, WordNGrams}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Spark session extensions for the graft engine: registers custom
-  * Catalyst expressions so SQL and `expr(...)` can use them.
+  * Catalyst expressions so SQL and `expr(...)` can use them. This is the
+  * only registration path; each builder lives in its function's
+  * companion, next to the expression it builds.
   *
-  * Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
+  * [[GraftSession.builder]] installs it with `withExtensions`; a session
+  * built elsewhere enables it with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (one of
+  * the two, not both: both inject every function twice).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => {
-        def intLit(e: Expression): Int =
-          e.asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-        MinHashSig(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_jaccard"),
-      new ExpressionInfo(classOf[NGramJaccard].getName, "ngram_jaccard"),
-      (exprs: Seq[Expression]) => {
-        val n = exprs(2).asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-        NGramJaccard(exprs.head, exprs(1), n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("lang_id"),
-      new ExpressionInfo(classOf[LangId].getName, "lang_id"),
-      (exprs: Seq[Expression]) => LangId(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_chunks"),
-      new ExpressionInfo(classOf[RollingChunks].getName, "rolling_chunks"),
-      (exprs: Seq[Expression]) => {
-        val n = exprs(1).asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-        RollingChunks(exprs.head, n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) => {
-        val n = exprs(1).asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-        val d = exprs(2).asInstanceOf[Literal].value.asInstanceOf[Boolean]
-        WordNGrams(exprs.head, n, d)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (exprs: Seq[Expression]) => CmsEstimate(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (exprs: Seq[Expression]) => NormalizeText(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("word_chunks"),
-      new ExpressionInfo(classOf[WordChunks].getName, "word_chunks"),
-      (exprs: Seq[Expression]) => {
-        def intLit(e: Expression): Int =
-          e.asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-        WordChunks(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
+}
+
+object GraftExtensions {
+
+  /** (SQL name, expression class, builder) of every injected function. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("simhash64", classOf[SimHash64], SimHash64.build),
+    ("minhash_sig", classOf[MinHashSig], MinHashSig.build),
+    ("ngram_jaccard", classOf[NGramJaccard], NGramJaccard.build),
+    ("lang_id", classOf[LangId], LangId.build),
+    ("cosine_sim", classOf[CosineSim], CosineSim.build),
+    ("rolling_chunks", classOf[RollingChunks], RollingChunks.build),
+    ("word_ngrams", classOf[WordNGrams], WordNGrams.build),
+    ("cms_estimate", classOf[CmsEstimate], CmsEstimate.build),
+    ("normalize_text", classOf[NormalizeText], NormalizeText.build),
+    ("word_chunks", classOf[WordChunks], WordChunks.build))
 }

@@ -30,7 +30,7 @@ object GraftSession {
       // 64 MB advisory target — AQE can merge partitions but never
       // split them, so the initial width is the only guard against a
       // big stage sorting/aggregating in too-few, too-fat tasks. Found
-      // at TextScaleBench's 500k-doc point (r12): the exact-substring
+      // at the text sweep's 500k-doc point (r12): the exact-substring
       // digest sort at 123M windows ran 32-wide → ~150 MB+spill per
       // task → 2.5× docs cost 4.5× time; at 128-wide the same query
       // returned to linear (q134 106→53 s). On a cluster size this to
@@ -45,7 +45,7 @@ object GraftSession {
       // in 64 MB pages) — an in-memory footprint ~3-4× the compressed
       // bytes. Execution memory is ~heap×0.6/cores per concurrent task,
       // so Spark's 64 MB default advisory overflows the share exactly
-      // when every core is busy sorting: at TextScaleBench's 1M-doc
+      // when every core is busy sorting: at the text sweep's 1M-doc
       // point (r13) the 245M-row digest sort spill-stormed (q133 205 s,
       // ±30% run-to-run; jstack caught UnsafeExternalSorter.spill →
       // TaskMemoryManager.trySpillAndAcquire), while a 24 MB advisory
@@ -108,12 +108,15 @@ object GraftSession {
       // default is best-effort by design).
       .config("spark.io.compression.codec", "zstd")
       .config("spark.sql.session.timeZone", "UTC")
-      // custom expressions (simhash64, minhash_sig, ngram_jaccard,
-      // lang_id, cosine_sim) available in SQL everywhere. BOTH forms:
-      // the static conf serves spark-submit-created contexts, while
-      // withExtensions applies even when this builder reuses an already
-      // -running SparkContext (the static conf is read only at context
-      // creation and would otherwise be silently ignored).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+      // the ten custom expressions (simhash64, minhash_sig,
+      // ngram_jaccard, lang_id, cosine_sim, rolling_chunks, word_ngrams,
+      // cms_estimate, normalize_text, word_chunks; see
+      // GraftExtensions.functions) available in SQL in every session this
+      // builder makes. withExtensions applies even when the builder
+      // reuses an already-running SparkContext, where the static
+      // `spark.sql.extensions` conf would be silently ignored; setting
+      // that conf as well injected every function twice, one
+      // "replaced a previously registered function" WARN per function
+      // per session.
       .withExtensions(new GraftExtensions)
 }

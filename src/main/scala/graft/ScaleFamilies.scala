@@ -1,0 +1,799 @@
+package graft
+
+import graft.ScaleSweep.{Arm, Family, Point, Run, clock, drain, list, str, timed}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The registry of [[ScaleSweep]] families: each names its record, its
+  * default ladder, its input generator and its arms, and nothing else.
+  * Arms that time a registered query time the exact code path the
+  * oracle checks, not a bench-only variant.
+  */
+object ScaleFamilies {
+
+  /** The testdata dir graph, warehouse and pq replicate. */
+  def defaultBase: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  private val registry: Seq[(String, String => Family)] = Seq(
+    "text" -> (_ => Text),
+    "graph" -> (new Graph(_)),
+    "warehouse" -> (new Warehouse(_)),
+    "pq" -> (new Pq(_)),
+    "embed" -> (_ => Embed),
+    "image" -> (_ => Image),
+    "audio" -> (_ => Audio),
+    "stream" -> (_ => StreamFamily),
+    "crossover" -> (_ => Crossover))
+
+  val names: Seq[String] = registry.map(_._1)
+
+  def named(name: String, base: String): Family =
+    registry.toMap.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown scale family '$name'; one of ${names.mkString(", ")}"))(base)
+
+  private def cpus: Int = GraftSession.envCpus()
+
+  /** A registered query as an arm (resolved now, so a renamed query
+    * fails when the family is built, not mid-sweep).
+    */
+  private def query(spark: SparkSession, name: String, at: Point => Boolean = _ => true): Arm = {
+    val fn = SparkEntry.queries(name)
+    Arm(name, at)(p => timed(drain(fn(spark, p.dir))))
+  }
+
+  /** The synthetic embedding table shared by the text and embed
+    * families: deterministic dim-64 vectors keyed 0 until n, ~2%
+    * planted near-dups (vec_id ≡ 7 (mod 50) copies the vector of the
+    * eval probe at vec_id − 7, a % 25 == 0 id), written as
+    * `dir/embeddings.parquet`.
+    */
+  private def writeEmbeddings(spark: SparkSession, n: Int, dir: String): Unit = {
+    val dim = 64
+    spark.range(n.toLong).select(col("id").as("vec_id"))
+      .withColumn("__src",
+        when(pmod(col("vec_id"), lit(50L)) === 7, col("vec_id") - 7)
+          .otherwise(col("vec_id")))
+      .select(
+        col("vec_id"),
+        transform(sequence(lit(0), lit(dim - 1)), j =>
+          ((pmod(xxhash64(col("__src") * lit(dim.toLong) + j), lit(2001L))
+            - 1000L).cast("double") / 1000.0).cast("float"))
+          .as("embedding"))
+      .repartition(cpus)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+  }
+
+  /** The image and audio corpora, stored two ways under `dir`:
+    *  - `blobs.parquet`: one table with an opaque `binary` content
+    *    column — the multimodal-column layout this engine recommends at
+    *    100 TB (blob + typed metadata in columnar files; scan tasks get
+    *    splittable, self-describing input);
+    *  - `<ext>/sub_XXX/<prefix>_<id>.<ext>`: one file per blob under 256
+    *    subdirectories, read through Spark's binaryFile source — the
+    *    layout corpora actually arrive in. The delta between the two
+    *    layouts at the same n is the price of per-file listing + open.
+    *
+    * File corpora are expensive, so a finished corpus is reused. Its
+    * marker carries the generator's kernel hash (r15 ADVICE): a corpus
+    * from an older kernel regenerates instead of silently timing
+    * different bytes than the other layout.
+    */
+  private def writeBlobs(
+      spark: SparkSession, dir: String, n: Int, kernel: String,
+      prefix: String, ext: String, bytes: Long => Array[Byte]): String = {
+    import spark.implicits._
+    val marker = new java.io.File(s"$dir/_DONE_${n}_$kernel")
+    if (!marker.exists()) {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      spark.range(n.toLong).repartition(cpus)
+        .select(col("id").as("doc_id")).as[Long]
+        .map(id => (id, bytes(id)))
+        .toDF("doc_id", "content")
+        .write.mode("overwrite").parquet(s"$dir/blobs.parquet")
+      val files = s"$dir/$ext"
+      (0 until 256).foreach(i => new java.io.File(files, f"sub_$i%03d").mkdirs())
+      spark.range(n.toLong).repartition(cpus).as[Long]
+        .foreachPartition { (it: Iterator[Long]) =>
+          it.foreach { id =>
+            val out = new java.io.FileOutputStream(
+              f"$files/sub_${id % 256}%03d/${prefix}_$id.$ext")
+            try out.write(bytes(id))
+            finally out.close()
+          }
+        }
+      marker.createNewFile()
+    }
+    dir
+  }
+
+  /** The per-file layout of [[writeBlobs]] as (doc_id, content). */
+  private def blobFiles(spark: SparkSession, dir: String, prefix: String, ext: String): DataFrame =
+    graft.sources.RobustSources
+      .binaryBlobs(spark, s"$dir/$ext/sub_*", s"*.$ext")
+      .select(
+        regexp_extract(col("path"), s"${prefix}_(\\d+)\\.$ext", 1)
+          .cast("long").as("doc_id"),
+        col("content"))
+
+  /** The text/retrieval family: the per-round bench corpus is 5,000 docs
+    * at sf0.1, far too small to show whether the one-pass BM25 (q101),
+    * inverted-index build (q102), span dedup (q105), and TF-IDF (q42)
+    * designs — and the curation chain — hold as the corpus grows. Each
+    * point is a deterministic Zipf-skewed corpus (docs of 40–200 words,
+    * ~1% planted occurrences of the fixed BM25 query terms so the
+    * scoring legs stay non-degenerate) in the testdata layout.
+    * Linear sec-vs-N (flat ms/doc) is the pass criterion: every one of
+    * these plans is a constant number of corpus passes plus
+    * vocabulary-bounded shuffles.
+    */
+  // 500000 joined the default ladder in r12 (verdict #2: every past
+  // cliff was found at the next decade — this one found two: the
+  // 32-wide sort spill and the mark-spelling reversal); JIT warmup on
+  // the smallest corpus
+  object Text extends Family("text_scale", "n_docs", Seq(5000, 50000, 200000, 500000), _.head) {
+
+    def input(spark: SparkSession, n: Int): String = {
+      val dir = s"/tmp/graft_textscale_$n"
+      // Zipf-ish vocab via cubed uniform hash; fixed BM25/TF-IDF query
+      // terms planted at ~1% so the term-restricted legs see real hits.
+      def u(c: Column) =
+        pmod(xxhash64(c), lit(100000L)).cast("double") / 100000.0
+      spark.range(n.toLong).select(col("id").as("doc_id"))
+        .withColumn("len", (lit(40) + pmod(xxhash64(col("doc_id")), lit(161L))).cast("int"))
+        .select(
+          col("doc_id"),
+          concat_ws(" ",
+            transform(sequence(lit(0), col("len") - 1),
+              j => {
+                val pos = col("doc_id") * 1009L + j
+                val r = u(pos)
+                when(r < 0.004, lit("spark"))
+                  .when(r < 0.008, lit("merge"))
+                  .when(r < 0.012, lit("window"))
+                  .when(r < 0.016, lit("table"))
+                  .otherwise(concat(lit("w"),
+                    floor(lit(5000.0) * pow(u(pos * 7L + 3L), 3.0))
+                      .cast("long").cast("string")))
+              })).as("text"),
+          // 60/20/20 en/de/fr so the DSIR target-vs-raw split (q135,
+          // target = en) stays non-degenerate as the corpus grows
+          element_at(
+            array(lit("en"), lit("en"), lit("en"), lit("de"), lit("fr")),
+            (pmod(col("doc_id"), lit(5L)) + 1).cast("int")).as("lang"),
+          concat(lit("src"), pmod(col("doc_id"), lit(20L)).cast("string")).as("source"))
+        .withColumn("n_chars", length(col("text")))
+        .repartition(cpus)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // the embedding table for the decontamination arms (r14 verdict
+      // #3), so the stage has real drops at every N. Only within the
+      // committed blocking codebook ceiling — past it blockingFor
+      // THROWS by design, and the sweep skips the arms instead of
+      // training a new book mid-bench.
+      if (withinBooks(n)) writeEmbeddings(spark, n, dir)
+      dir
+    }
+
+    private def withinBooks(n: Int): Boolean =
+      n <= graft.model.IvfCentroids.blockingTrainedCeiling
+    // arms that read the embedding table exist only within the codebook
+    // ceiling (see input)
+    private val needsEmb = Set("q139_embed_decontam", "fused_decontam")
+
+    // ORDERED LIGHT → HEAVY at each point, the biggest spillers LAST
+    // (r13 2M-doc finding): even with BenchHarness.quiesce draining the
+    // cleaner's unlink storm, a query that follows the two giant digest
+    // sorters back-to-back still pays residual post-spill JVM/OS state —
+    // q135 measured 66 s isolated, 105 s after ONE heavy (q134), 215 s
+    // after both (q133+q134, ~590 s of spill) — while a LIGHT query in
+    // between fully decays it (q136/q138/q142 after the fix matched
+    // their isolated bands in the same sweep). Running spillers last
+    // means nothing is downstream of them to contaminate; within the
+    // non-spilling prefix, adjacency effects are inside run-to-run
+    // noise. Family groupings below are kept within cost tiers.
+    private val order = Seq(
+      // tier 1: sub-linear / tiny working sets
+      "q136_pack_offsets", "q101_bm25_topk",
+      // tier 2: one to two corpus passes, modest shuffles
+      "q105_span_dedup", "q42_tfidf_top_term",
+      "q142_bpe_encode", "q143_pack_bpe",
+      "q145_pack_boundaries", "q146_epoch_order",
+      "epoch_order_10", "q147_bpe_decode",
+      "q148_shard_assign", "q152_shard_tokens",
+      "q102_inverted_index", "q132_hybrid_rrf_topk",
+      // tier 3: exploded-bigram passes / gather (larger shuffles,
+      // still linear)
+      "q135_dsir_select", "q144_pack_gather",
+      "q138_kn_lm_score", "q140_ccnet_lm_filter",
+      // the standalone decontamination stage over the sweep's synthetic
+      // embeddings (IVF-blocked probe join — modest, but after the
+      // bigram tier so the fused-vs-sum arithmetic reads off one sweep)
+      "q139_embed_decontam",
+      // tier 4: the giant digest sorters — LAST, nothing downstream
+      "q133_dup_substr_spans", "q134_dup_substr_cut",
+      // the fused lineages contain the q134 digest sort, so they are
+      // tier-4 spillers too and run at the very end; fused_decontam
+      // (r14 verdict #3) is the full six-stage chain including the
+      // embedding join
+      "fused_pipeline", "fused_decontam")
+
+    // Sweep-only arms with no DuckDB-oracle registration: the text-only
+    // fused pipeline (skips q150's decontamination stage: `decontam =
+    // None`), the FULL fused pipeline over the sweep's embedding table
+    // (`fused_decontam`, r14 verdict #3 — the one stage with a
+    // second-table join has fused scale evidence), and the 10-epoch
+    // q146 (proves the epoch dimension scales linearly). The
+    // fused-vs-sum-of-stages comparison reads fused_pipeline against
+    // q134 + q142 + q144 + q148 at the same point: the fused run re-reads
+    // no intermediate from parquet, so it must come in at or under the
+    // sum.
+    private def fused(s: SparkSession, dir: String, decontam: Boolean): DataFrame =
+      graft.operators.CurationPipeline.curateToShards(
+        Tables.documents(s, dir), "doc_id", "text",
+        decontam = Option.when(decontam)((
+          Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
+          graft.model.IvfCentroids.blockingFor(s, dir))),
+        merges = graft.model.BpeMerges.merges,
+        idOf = graft.model.BpeMerges.idOf)
+    private val extra: Map[String, (SparkSession, String) => DataFrame] = Map(
+      "fused_pipeline" -> (fused(_, _, decontam = false)),
+      "fused_decontam" -> (fused(_, _, decontam = true)),
+      "epoch_order_10" -> (graft.queries.TrainQueries.epochOrder(_, _, nEpochs = 10L)))
+
+    def arms(spark: SparkSession): Seq[Arm] = order.map { q =>
+      val at = (p: Point) => !needsEmb(q) || withinBooks(p.n)
+      extra.get(q) match {
+        case Some(fn) => Arm(q, at)(p => timed(drain(fn(spark, p.dir))))
+        case None => query(spark, q, at)
+      }
+    }
+
+    override def header(arms: Seq[String]): Seq[(String, String)] = Seq(
+      "queries_registered" -> arms.size.toString,
+      "isolated" -> list(arms.filter(ScaleSweep.isolated)))
+
+    override def setup(spark: SparkSession, p: Point): Seq[(String, String)] = {
+      // the GraftSession sizing rule applied (see its fallbackThreshold
+      // note: ObjectHashAggregate's sort fallback triggers on group
+      // COUNT, never bytes — it is the only bound on per-group buffer
+      // memory). At ≥500k docs the collect-style aggs (q102 postings,
+      // q142 per-doc id streams) hold ~100 MB+ of buffers per task and
+      // 32 concurrent tasks blow the 8g executor share
+      // (AGGREGATE_OUT_OF_MEMORY, found in the r12 sweep); a low
+      // threshold flips them to the external-sort path, which streams
+      // one group at a time. Small points keep the fast object-hash
+      // regime.
+      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        if (p.n >= 500000) "1024" else "2000000")
+      // record the exact-substring auto-pass decision against THIS
+      // corpus and the host's real free scratch (r15 verdict next #3):
+      // the sizing inputs ride along so a reader can replay the rule
+      val (autoK, autoIn, autoFree) = graft.operators.ExactSubstr
+        .autoPassDecision(spark.read.parquet(s"${p.dir}/documents.parquet"))
+      Seq(
+        "auto_passes" -> autoK.toString,
+        "auto_input_mb" -> f"${autoIn / 1e6}%.1f",
+        "auto_free_gb" -> f"${autoFree / 1e9}%.1f")
+    }
+
+    // per-point coverage is explicit (r15 ADVICE): points past the
+    // blocking-codebook ceiling drop the embedding arms, so each point
+    // carries the count it actually timed plus the skipped arm names —
+    // a consumer diffing fused vs sum sees the gap instead of assuming
+    // the registered count everywhere
+    override def summary(
+        spark: SparkSession, p: Point, secs: Seq[(String, Double)],
+        skipped: Seq[String]): Seq[(String, String)] =
+      Seq("queries_timed" -> secs.size.toString, "skipped" -> list(skipped))
+  }
+
+  /** graph, warehouse and pq: a testdata table set replicated k× with
+    * shifted keys ([[ScaleDataGen.replicate]]) — each replica a disjoint
+    * copy, so rows and per-key structure scale exactly k×.
+    */
+  private abstract class Replicated(
+      metric: String, tag: String, tables: Seq[String], ladder: Seq[Int], base: String)
+      extends Family(metric, "k", ladder, _ => 1) { // warmup on the base tables
+    def input(spark: SparkSession, k: Int): String = {
+      val dir = s"/tmp/graft_${tag}scale_$k"
+      ScaleDataGen.replicate(spark, base, dir, k, tables)
+      dir
+    }
+    override def header(arms: Seq[String]): Seq[(String, String)] = Seq("base" -> str(base))
+  }
+
+  /** The graph family (q110 triangle counting, q76 PageRank, q50
+    * connected components): the sf0.1 lineitem co-purchase graph is
+    * ~10⁵ edges, too small to show whether the adjacency shuffles and
+    * the O(|E|^1.5) merge-walk bound actually govern growth. Replicas
+    * scale |E| and triangle counts exactly k×; part keys shift too,
+    * keeping |V| proportional and the degree distribution identical.
+    * The pass criterion is time growth ≤ the k^1.5 envelope on q110 (its
+    * compute bound) and ~linear on q76/q50 (constant rounds × per-edge
+    * work — q50's pointer-jumping round count grows with component
+    * DIAMETER, which replication leaves unchanged).
+    */
+  private class Graph(base: String)
+      extends Replicated("graph_scale", "graph", Seq("lineitem"), Seq(1, 4, 16), base) {
+    def arms(spark: SparkSession): Seq[Arm] = {
+      import graft.queries.GraphQueries
+      // q50's registered spelling prepends an all-pairs cosine edge
+      // BUILD (its own documented small-N yardstick shape), which would
+      // measure the quadratic builder, not the graph kernel — so the
+      // connected-components arm times `ConnectedComponents.byMinLabel`
+      // directly on the replicated bipartite order→part edge set
+      // (disjoint replicas: |E| scales k×, component diameter unchanged).
+      def ccEdges(dir: String) =
+        spark.read.parquet(s"$dir/lineitem.parquet")
+          .select(col("l_orderkey").as("src"),
+            (col("l_partkey") + 2000000000L).as("dst"))
+          .distinct()
+      // q129's scale path: the SAMPLED triangle kernel under the
+      // constant-relative-error schedule p = 0.3·k^(-1/3) (variance/T²
+      // constant, work O((pE)^1.5) = O(E) — the linear scale sibling of
+      // q110's O(E^1.5) exact kernel). Same registered kernel, same
+      // deterministic md5 keep-rule as q129, threshold shrinking with k.
+      def triSampled(dir: String, k: Int): Unit = {
+        val keep = math.round(300.0 * math.pow(k.toDouble, -1.0 / 3)).toInt
+        val nPart = GraphQueries.corePartitions(spark)
+        drain(GraphQueries.trianglePerPartCredits(
+          GraphQueries.bothDirections(
+            GraphQueries.coPurchaseEdgesOf(
+              spark.read.parquet(s"$dir/lineitem.parquet"), nPart)
+              .filter(GraphQueries.edgeKeep(keep))),
+          nPart))
+      }
+      Seq(
+        query(spark, "q110_triangle_count"),
+        query(spark, "q76_pagerank"),
+        Arm("cc_kernel")(p => timed(drain(
+          graft.operators.ConnectedComponents.byMinLabel(ccEdges(p.dir))))),
+        Arm("tri_sampled_kernel")(p => timed(triSampled(p.dir, p.n))))
+    }
+  }
+
+  /** The warehouse family (q111 SCD2 merge, q113 point-in-time join,
+    * q115 IVM merge, q122 conversion attribution). Each replica of the
+    * event log (and lineitem, for q115) is a disjoint population, so the
+    * per-user history LENGTH is unchanged while user count and total
+    * rows scale k× — exactly how a growing warehouse behaves, and the
+    * shape that stresses the one-shuffle-per-user-key window designs.
+    * The pass criterion is ~linear growth: every one of these plans is a
+    * constant number of key-partitioned shuffles and window passes, no
+    * per-row joins against history.
+    */
+  private class Warehouse(base: String)
+      extends Replicated("warehouse_scale", "wh", Seq("events", "lineitem"), Seq(1, 8, 40), base) {
+    def arms(spark: SparkSession): Seq[Arm] =
+      Seq("q111_scd2_apply", "q113_pit_join", "q115_ivm_merge", "q122_attribution")
+        .map(query(spark, _))
+  }
+
+  /** The PQ family: the sf0.1 embeddings table is 2,000 vectors — small
+    * enough that q123/q124 timings are scheduling-bound, not scan-bound.
+    * Replicas keep the query side (vec_id < 10) constant while the
+    * corpus, and every per-candidate cost, scales exactly k×. Expected
+    * shape: encode and flat-ADC (q123) grow ~linearly in k; IVF-PQ
+    * (q124) grows more slowly on the scan side (it touches
+    * ~nprobe/cells of the corpus) but shares the linear encode.
+    */
+  private class Pq(base: String)
+      extends Replicated("pq_scale", "pq", Seq("embeddings"), Seq(1, 8, 40), base) {
+    def arms(spark: SparkSession): Seq[Arm] = {
+      def encodeKernel(dir: String): Unit = {
+        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val cb = operators.ProductQuantizer.trainCodebook(emb, "vec_id", "embedding", 64)
+        drain(operators.ProductQuantizer.encode(emb, "vec_id", "embedding", cb, 16))
+      }
+      Seq(query(spark, "q123_pq_adc"), query(spark, "q124_ivfpq"),
+        Arm("encode_kernel")(p => timed(encodeKernel(p.dir))))
+    }
+  }
+
+  /** Blocked embedding near-dup (SemDeDup's production path, r15 verdict
+    * next #7: q94/q50 had no point past sf1's ~20k vectors): sweeps
+    * [[graft.operators.Similarity.blockedNearDupPairs]] over the shared
+    * synthetic embedding table at sizes far beyond the committed
+    * frozen-book ceiling — so the arm runs the PRODUCTION auto-K path
+    * (in-query Lloyd's on a 16k sample, K = nprobe·√(N/2), the
+    * flop-balanced rule) rather than a frozen book reused out of regime
+    * (the exact N²/K growth the per-scale books exist to stop).
+    *
+    * Recorded per point — the numbers that decide whether the blocking
+    * scales, not just whether it finishes:
+    *  - `neardup_sec` and survivor `pairs`;
+    *  - `planted_recall_pct`: found planted copies / planted (exact
+    *    copies assign to identical cells, so this isolates cell-cap and
+    *    plumbing losses, not quantizer recall);
+    *  - `auto_k` and `incell_pairs`: Σ_cells (occ choose 2) — the
+    *    in-cell candidate volume whose growth exponent is the scale
+    *    story (flop-balanced auto-K predicts ~linear in N: nprobe²·N²/2K
+    *    with K ∝ √N gives N^1.5/√2... per-cell balance holds it near
+    *    nprobe·√(N/2)·N — the record tests the prediction);
+    *  - `capped_cells` / `max_occ` / `mean_occ`: the skew-insurance hit
+    *    rate (occupancy cap = 10× mean; see blockedNearDupPairs).
+    * The stats pass re-derives the SAME quantizer (same seed, same
+    * sample recipe) so it describes the timed run faithfully.
+    */
+  object Embed extends Family("embed_scale", "n_vecs", Seq(200000, 600000, 1500000), _ => 20000) {
+    private val dim = 64
+    // τ = 0.9: the planted near-dups are exact copies (cosine 1.0), and
+    // in-cell candidates are cosine-correlated BY CONSTRUCTION (same
+    // nearest centroid), so the q50 gate of 0.4 — tuned for the narrow
+    // testdata distribution — forms a correlation blob on this uniform
+    // corpus (measured: 2.48M survivor edges vs 4,000 planted at 200k).
+    // The candidate-scan COST is τ-independent (every candidate pays
+    // its cosine either way); 0.9 keeps the survivor set dedup-shaped.
+    private val tau = 0.9
+    private val nprobe = 4
+
+    def input(spark: SparkSession, n: Int): String = {
+      val dir = s"/tmp/graft_embscale_$n"
+      val marker = new java.io.File(s"$dir/_DONE_$n")
+      if (!marker.exists()) {
+        writeEmbeddings(spark, n, dir)
+        marker.createNewFile()
+      }
+      dir
+    }
+
+    private def autoK(n: Int): Int =
+      math.min(65536, math.max(16, (nprobe * math.ceil(math.sqrt(n.toDouble / 2))).toInt))
+
+    def arms(spark: SparkSession): Seq[Arm] = Seq(Arm("neardup_sec") { p =>
+      val emb = spark.read.parquet(s"${p.dir}/embeddings.parquet")
+      val ((pairs, planted), sec) = clock {
+        val survivors = graft.operators.Similarity.blockedNearDupPairs(
+          emb, "vec_id", "embedding", tau, nprobe = nprobe)
+          .localCheckpoint(true) // two consumers: total + planted split
+        (survivors.count(),
+          survivors.filter(
+            col("dst") - col("src") === 7 && pmod(col("dst"), lit(50L)) === 7)
+            .count())
+      }
+      val plantedTotal = (p.n - 8) / 50 + 1 // vec_ids 7, 57, ... < n
+      Run(sec, Seq(
+        "pairs" -> pairs.toString,
+        "planted_found" -> planted.toString,
+        "planted_recall_pct" -> f"${planted * 100.0 / plantedTotal}%.1f"))
+    })
+
+    override def header(arms: Seq[String]): Seq[(String, String)] = Seq(
+      "dim" -> dim.toString, "tau" -> tau.toString, "nprobe" -> nprobe.toString)
+
+    // occupancy/candidate stats off the SAME quantizer recipe (seed,
+    // sample, auto-K) the timed run used — in-cell candidate volume
+    // and cap hit rate, the growth record (untimed)
+    override def summary(
+        spark: SparkSession, p: Point, secs: Seq[(String, Double)],
+        skipped: Seq[String]): Seq[(String, String)] = {
+      import spark.implicits._
+      val k = autoK(p.n)
+      val assigned = graft.operators.Spread.ensure(
+        spark.read.parquet(s"${p.dir}/embeddings.parquet").select(col("vec_id").as("__id"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("__v")))
+        .localCheckpoint(true)
+      val cents = graft.operators.Similarity.trainQuantizer(
+        assigned, "__v", k, seed = 7L,
+        trainSample = math.max(16384, 32 * k), // the timed run's rule
+        knownCount = p.n.toLong)
+      val (incell, maxOcc, meanOcc, capped) = assigned
+        .select(explode(graft.functions.NearestCells.toCol(
+          col("__v"), cents, nprobe)).as("__cell"))
+        .groupBy(col("__cell")).agg(count(lit(1)).as("c"))
+        .agg(
+          sum(col("c") * (col("c") - 1) / 2).as("incell_pairs"),
+          max(col("c")).as("max_occ"),
+          avg(col("c")).as("mean_occ"),
+          sum(when(col("c") >
+            greatest(lit(64.0), lit(10.0 * nprobe * p.n.toDouble / k)), 1L)
+            .otherwise(0L)).as("capped_cells"))
+        .as[(Double, Long, Double, Long)].head()
+      Seq(
+        "auto_k" -> k.toString,
+        "incell_pairs" -> incell.toLong.toString,
+        "max_occ" -> maxOcc.toString,
+        "mean_occ" -> f"$meanOcc%.1f",
+        "capped_cells" -> capped.toString)
+    }
+  }
+
+  /** The image near-dup family (r14 verdict #6: q151 had no scale decade
+    * and its corpus was an in-query generator, not a stored one): the
+    * SAME deterministic PNG corpus as q151 ([[graft.operators.ImageGen]]
+    * — planted within-group near-dups, mixed against cross-group
+    * collisions), stored both ways by [[writeBlobs]]. Arms: decode+hash
+    * throughput over each layout (pooled thread-local ImageIO reader —
+    * the production spelling), the general per-call reader as an A/B at
+    * the first point (prices the pooled reader's win at corpus scale),
+    * and the full q151 pipeline (hash index pinned once, 16-bit-band LSH
+    * candidates, Hamming ≤ 6 gate) over the packed layout — its growth
+    * exponent is the banded join's scale story.
+    */
+  object Image extends Family("image_scale", "n_images", Seq(100000, 500000, 1000000), _ => 2000) {
+
+    def input(spark: SparkSession, n: Int): String =
+      writeBlobs(spark, s"/tmp/graft_imscale_$n", n, graft.operators.ImageGen.kernelHash,
+        "img", "png", graft.operators.ImageGen.pngFor)
+
+    // ≥3 timed runs per arm at the points the stability claim is about
+    // (500k/1M) — r15 verdict wrong #2: one sample per arm let "packed
+    // is stable" overstate a 1.5× spread; the small point keeps
+    // single-sample cost
+    override def reps(n: Int): Int = if (n >= 500000) 3 else 1
+
+    def arms(spark: SparkSession): Seq[Arm] = {
+      import spark.implicits._
+      import graft.operators.{ImageHash, MediaCodecs}
+      // decode+hash over a (doc_id, content) frame; one narrow hashed
+      // row per image
+      def hashed(blobs: DataFrame, pooled: Boolean): DataFrame =
+        blobs.as[(Long, Array[Byte])].map { case (id, png) =>
+          val img =
+            (if (pooled) MediaCodecs.decodeImageIOReused(png)
+             else MediaCodecs.decodeImageIO(png))
+              .getOrElse(sys.error(s"decode failed for doc $id"))
+          (id, (0 until 64).map(j => img.rgb(j * 3) & 0xff))
+        }.toDF("doc_id", "gray")
+          .withColumn("tot", ImageHash.graySum(col("gray")))
+          .select(
+            col("doc_id"),
+            ImageHash.aHashLo("gray", "tot").as("lo"),
+            ImageHash.aHashHi("gray", "tot").as("hi"),
+            ImageHash.dHash("gray").as("dh"))
+      def packed(p: Point) = spark.read.parquet(s"${p.dir}/blobs.parquet")
+      val first = (p: Point) => p.first
+      Seq(
+        Arm("hash_packed_pooled")(p => timed(drain(hashed(packed(p), pooled = true)))),
+        Arm("hash_packed_general", first)(p =>
+          timed(drain(hashed(packed(p), pooled = false)))),
+        // repeat of the pooled arm AFTER the general one: the first
+        // timed arm of a point absorbs residual warmup, so the
+        // pooled-vs-general delta is read from this pair, not the first
+        Arm("hash_packed_pooled2", first)(p =>
+          timed(drain(hashed(packed(p), pooled = true)))),
+        Arm("hash_binfile_pooled")(p => timed(drain(
+          hashed(blobFiles(spark, p.dir, "img", "png"), pooled = true)))),
+        Arm("neardup_packed")(p => timed {
+          val h = hashed(packed(p), pooled = true)
+            .localCheckpoint(true) // the q151 two-consumer pin
+          drain(ImageHash.bandCandidatePairs(h)
+            .filter(ImageHash.hamming(
+              col("a_lo"), col("a_hi"), col("b_lo"), col("b_hi")) <= 6)
+            .select(col("a_id"), col("b_id")).distinct())
+        }))
+    }
+  }
+
+  /** The audio near-dup family (r15 verdict next #2 — q154 existed only
+    * on 520-sample fixture clips): REALISTIC-length clips
+    * ([[graft.operators.AudioGen.samplesVar]], 131072 samples ≈ 16 s at
+    * 8 kHz, groups of 4 with planted re-levels and a frame-aligned time
+    * shift), stored both ways by [[writeBlobs]] as WAV bytes. Arms:
+    *  - sub-fingerprint extraction over each layout (real WAV decode →
+    *    frame energies → Haitsma–Kalker sub-prints at hop 64), plus at
+    *    the first point the ENCODE→DECODE→require roundtrip variant —
+    *    this prices q154's in-query self-proof at real clip lengths (r15
+    *    verdict wrong #4; the conf `spark.graft.audio.roundtrip` gates
+    *    it in-query);
+    *  - banded near-dup over sub-prints under BOTH bandings: 4×16-bit
+    *    ([[graft.operators.ImageHash.bands]] — the q151/q154 regime) and
+    *    2×32-bit (`ImageHash.bandsWide`). A sub-print table holds
+    *    clips × windows prints, so 16-bit buckets collide QUADRATICALLY
+    *    with N (chance candidates ∝ (NW/2^16)²/2 per bucket) while
+    *    32-bit buckets stay near-empty — the result-pair counts per
+    *    point are the record of where each banding regime stops
+    *    scaling. No silent caps.
+    * Planted recall at the first point closes it: re-level pairs found
+    * vs planted (the hop-aligned catch), shift pairs reported separately
+    * (missed at hop 64 BY DESIGN — hop-1 catches them, spec'd in
+    * AudioHashSpec; the hop axis is the storage-vs-shift-tolerance
+    * dial).
+    */
+  object Audio extends Family("audio_scale", "n_clips", Seq(1000, 4000, 10000), _ => 200) {
+    private val ClipLen = 131072
+    private val hop = 64
+
+    def input(spark: SparkSession, n: Int): String =
+      writeBlobs(spark, s"/tmp/graft_auscale_$n", n,
+        s"${ClipLen}_${graft.operators.AudioGen.kernelHash}", "clip", "wav",
+        id => graft.operators.MediaCodecs.encodeWav(
+          8000, graft.operators.AudioGen.samplesVar(id, ClipLen)))
+
+    override def header(arms: Seq[String]): Seq[(String, String)] =
+      Seq("clip_len" -> ClipLen.toString, "hop" -> hop.toString)
+
+    // fat-blob reader posture: the vectorized parquet reader sizes
+    // batches in ROWS (default 4096), and 4096 × ~262 KB WAV blobs is
+    // ~1 GB PER TASK — 32 concurrent scan tasks OOM any sane heap
+    // (measured here at the 10k point). Row-bound the batch so a batch
+    // holds ~16 MB of blobs; the same posture any 100 TB multimodal
+    // scan needs when a binary column's rows are 100s of KB.
+    override def setup(spark: SparkSession, p: Point): Seq[(String, String)] = {
+      spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "64")
+      Nil
+    }
+
+    // the IMSCALE r16 timing discipline: 3 timed runs recorded as
+    // min/med/max — the first AUSCALE record's single-sample arms swung
+    // 3.5× between identical runs (GC churn over the per-task array
+    // garbage: each clip materializes a 131k-int pcm + 2k window
+    // structs), which min/med/max makes visible instead of baking into
+    // one number
+    override def reps(n: Int): Int = 3
+
+    /** decode + sub-fingerprint over a (doc_id, content) frame; one
+      * (doc_id, sfp) row per clip. `roundtrip` adds the q154-style
+      * encode→decode→require self-proof — the arm that prices it.
+      */
+    private def subFps(blobs: DataFrame, roundtrip: Boolean): DataFrame = {
+      import blobs.sparkSession.implicits._
+      import graft.operators.{AudioHash, MediaCodecs}
+      blobs.as[(Long, Array[Byte])].map { case (id, wav) =>
+        val a = MediaCodecs.decodeWav(wav)
+          .getOrElse(sys.error(s"wav decode failed for clip $id"))
+        val samples =
+          if (roundtrip) {
+            val again = MediaCodecs.decodeWav(
+              MediaCodecs.encodeWav(a.sampleRate, a.samples))
+              .getOrElse(sys.error(s"wav re-decode failed for clip $id"))
+            require(java.util.Arrays.equals(again.samples, a.samples))
+            again.samples
+          } else a.samples
+        (id, samples.map(_.toInt).toSeq)
+      }.toDF("doc_id", "pcm")
+        .withColumn("e", AudioHash.frameEnergies("pcm"))
+        .select(col("doc_id"), AudioHash.subFingerprints("e", hop).as("sfp"))
+    }
+
+    // The checkpoint pin (the q151 two-consumer discipline) is INSIDE
+    // each timed closure: quiesce between runs drops checkpoint
+    // blocks, so a pin hoisted outside would vanish mid-arm
+    private def pinned(spark: SparkSession, p: Point): DataFrame =
+      subFps(spark.read.parquet(s"${p.dir}/blobs.parquet"), roundtrip = false)
+        .localCheckpoint(true)
+
+    def arms(spark: SparkSession): Seq[Arm] = {
+      import graft.operators.{AudioHash, ImageHash}
+      def packed(p: Point) = spark.read.parquet(s"${p.dir}/blobs.parquet")
+      // banded near-dup under one banding; counts recorded, not just
+      // seconds — the pair column IS the scale story
+      def neardup(name: String, bander: (Column, Column) => Column) = Arm(name) { p =>
+        val (pairs, sec) = clock(
+          AudioHash.subFpCandidatePairs(pinned(spark, p), bander)
+            .filter(col("min_hamming") <= 6).count())
+        Run(sec, Seq(s"${name}_pairs" -> pairs.toString))
+      }
+      Seq(
+        Arm("subfp_packed")(p => timed(drain(subFps(packed(p), roundtrip = false)))),
+        // the roundtrip price at real clip lengths (verdict wrong #4):
+        // read the delta between this arm's MIN and subfp_packed's MIN
+        // (mins bound the machine's best case; medians carry GC noise)
+        Arm("subfp_packed_roundtrip", _.first)(p =>
+          timed(drain(subFps(packed(p), roundtrip = true)))),
+        // (binaryFile probes the glob for a streaming-sink metadata dir
+        // and logs a benign FileNotFound WARN per query — glob noise)
+        Arm("subfp_binfile")(p => timed(drain(
+          subFps(blobFiles(spark, p.dir, "clip", "wav"), roundtrip = false)))),
+        neardup("neardup16", ImageHash.bands),
+        neardup("neardup32", ImageHash.bandsWide))
+    }
+
+    // planted recall at hop 64: re-level pairs (windows aligned —
+    // should be found) vs shift pairs (misaligned — missed BY DESIGN at
+    // this hop; hop 1 catches them, see AudioHashSpec)
+    override def summary(
+        spark: SparkSession, p: Point, secs: Seq[(String, Double)],
+        skipped: Seq[String]): Seq[(String, String)] =
+      if (!p.first) Nil
+      else {
+        import spark.implicits._
+        val found = graft.operators.AudioHash.subFpCandidatePairs(pinned(spark, p))
+          .filter(col("min_hamming") <= 6)
+          .filter(expr("a_id DIV 4 = b_id DIV 4"))
+          .select(col("a_id"), col("b_id"))
+          .as[(Long, Long)].collect().toSet
+        def pct(hit: Int, total: Int) = f"${hit * 100.0 / total}%.1f"
+        val groups = 0 until p.n / 4
+        val relevels = groups.flatMap(g =>
+          Seq((g * 4L, g * 4L + 1), (g * 4L, g * 4L + 3), (g * 4L + 1, g * 4L + 3)))
+        val shifts = groups.map(g => (g * 4L, g * 4L + 2))
+        Seq(
+          "recall_relevel_pct" -> pct(relevels.count(found), relevels.size),
+          "recall_shift_pct" -> pct(shifts.count(found), shifts.size))
+      }
+  }
+
+  /** The blocked-SemDeDup crossover: the per-round bench runs at sf0.1
+    * (2,000 vectors) where the N² pair count the blocked variant exists
+    * to avoid simply doesn't bite, so blocked ≈ exact there. Each point
+    * is a deterministic corpus with 10% planted near-duplicate pairs;
+    * the arms time the exact all-pairs SemDeDup (q82's plan shape) and
+    * [[graft.operators.Similarity.blockedSemDedup]] on the SAME input,
+    * and the blocked arm checks its recall on the planted pairs.
+    *
+    * Corpus: components are hash-derived in [-1,1] (zero-centered, like
+    * the embeddings fixture — uniform-positive vectors would
+    * make EVERY cosine ≈ 0.75 and the tau=0.4 threshold meaningless);
+    * every id ≡ 9 (mod 10) row re-uses the base of id−9 plus
+    * 0.15-amplitude noise → cosine ≈ 0.98 within a planted pair,
+    * ≈ 0 ± 1/√64 elsewhere.
+    */
+  // one point, 25× sf0.1
+  object Crossover extends Family("semdedup_crossover", "n", Seq(50000), _ => 2000) {
+    private val dim = 64
+    // Planted pairs sit at cosine ≈ 0.98; random pairs at 0 ± 1/√64.
+    // tau must clear the random tail at N² pair volume: 0.4 (q82's sf0.1
+    // value) is only 3.2σ — at N=20k that's ~10⁵ spurious edges and the
+    // whole corpus collapses into one component. 0.8 = 6.4σ ⇒ expected
+    // spurious pairs ≪ 1 even at N=100k.
+    private val tau = 0.8
+
+    override def header(arms: Seq[String]): Seq[(String, String)] =
+      Seq("dim" -> dim.toString, "tau" -> tau.toString)
+
+    // deterministic corpus; same planted-pair layout at any N
+    def input(spark: SparkSession, n: Int): String = {
+      val dir = s"/tmp/graft_xscale_$n"
+      def h(c: Column): Column =
+        (pmod(xxhash64(c), lit(2000001L)) - lit(1000000L)).cast("double") / 1000000.0
+      spark.range(n.toLong)
+        .withColumn("base_id",
+          when(col("id") % 10 === 9, col("id") - 9).otherwise(col("id")))
+        .select(
+          col("id").as("vec_id"),
+          transform(
+            sequence(lit(0), lit(dim - 1)),
+            j => h(col("base_id") * dim + j) +
+              lit(0.15) * h(col("id") * dim + j + lit(n.toLong * dim))
+          ).as("embedding"),
+          lit(0).as("label"))
+        .repartition(cpus)
+        .write.mode("overwrite").parquet(s"$dir/vecs.parquet")
+      dir
+    }
+
+    def arms(spark: SparkSession): Seq[Arm] = {
+      def vecs(p: Point) = spark.read.parquet(s"${p.dir}/vecs.parquet")
+      Seq(
+        Arm("blocked_sec") { p =>
+          val (survivors, sec) = clock(graft.operators.Similarity
+            .blockedSemDedup(vecs(p), "vec_id", "embedding", tau)
+            .localCheckpoint(true))
+          // planted-pair recall: every id≡9 (mod 10) is a near-dup of
+          // id−9; a pair was missed iff BOTH of its members survive
+          val planted = p.n / 10
+          val missed = survivors
+            .filter(col("vec_id") % 10 === 9).select((col("vec_id") - 9).as("b"))
+            .join(
+              survivors.filter(col("vec_id") % 10 === 0).select(col("vec_id").as("b")),
+              Seq("b"))
+            .count()
+          Run(sec, Seq(
+            "blocked_survivors" -> survivors.count().toString,
+            "planted_pairs" -> planted.toString,
+            "blocked_pair_recall" -> f"${(planted - missed).toDouble / planted}%.4f"))
+        },
+        // exact all-pairs (q82's plan: broadcast self-join, a.id < b.id)
+        Arm("exact_sec") { p =>
+          val e = vecs(p).select(col("vec_id"), col("embedding").as("v"))
+          val pairs = e.alias("a")
+            .join(e.alias("b"), col("a.vec_id") < col("b.vec_id"))
+            .filter(graft.functions.CosineSim.toCol(col("a.v"), col("b.v")) >= tau)
+            .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
+          val (dropped, sec) = clock(
+            graft.operators.ConnectedComponents.byMinLabel(pairs)
+              .filter(col("id") =!= col("component")).count())
+          Run(sec, Seq("exact_dropped" -> dropped.toString))
+        })
+    }
+
+    override def summary(
+        spark: SparkSession, p: Point, secs: Seq[(String, Double)],
+        skipped: Seq[String]): Seq[(String, String)] = {
+      val s = secs.toMap
+      if (s.contains("exact_sec") && s.contains("blocked_sec"))
+        Seq("speedup" -> f"${s("exact_sec") / s("blocked_sec")}%.2f")
+      else Nil
+    }
+  }
+}

@@ -92,7 +92,9 @@ object CmsEstimate {
     cms.estimateCount(java.lang.Long.valueOf(value))
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate", exprs => CmsEstimate(exprs.head, exprs(1)), "scala_udf")
+  /** Builds `cms_estimate(sketch, item)`, the SQL function [[graft.GraftExtensions]] injects. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 2, "cms_estimate(sketch, item)")
+    CmsEstimate(args.head, args(1))
+  }
 }

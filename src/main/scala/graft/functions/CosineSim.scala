@@ -83,8 +83,18 @@ object CosineSim {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Register `cosine_sim` on an existing session (tests / REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "scala_udf")
+  /** Builds `cosine_sim(a, b)`, the SQL function [[graft.GraftExtensions]] injects. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 2, "cosine_sim(a, b)")
+    CosineSim(args.head, args(1))
+  }
+
+  /** `cosine_sim` as a Column, for operators that must not depend on a
+    * session's registered SQL functions.
+    */
+  def toCol(
+      a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.internal.Cols.of(
+      CosineSim(graft.internal.Cols.expressionOf(a), graft.internal.Cols.expressionOf(b)))
 }

@@ -96,8 +96,9 @@ object LangId {
     if (best < 0) "unknown" else markers(best)._1
   }
 
-  /** Register `lang_id` on an existing session (tests / REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_id", exprs => LangId(exprs.head), "scala_udf")
+  /** Builds `lang_id(text)`, the SQL function [[graft.GraftExtensions]] injects. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 1, "lang_id(text)")
+    LangId(args.head)
+  }
 }

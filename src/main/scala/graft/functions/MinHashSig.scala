@@ -121,16 +121,21 @@ object MinHashSig {
     same.toDouble / a.length
   }
 
-  /** Register `minhash_sig` on an existing session (tests / REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => {
-        require(exprs.length == 3, "minhash_sig(text, numHashes, shingleSize)")
-        def intLit(e: Expression): Int =
-          e.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-            .value.asInstanceOf[Number].intValue()
-        MinHashSig(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-      },
-      "scala_udf")
+  /** Builds `minhash_sig(text, numHashes, shingleSize)`, the SQL function
+    * [[graft.GraftExtensions]] injects.
+    */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 3, "minhash_sig(text, numHashes, shingleSize)")
+    MinHashSig(args.head, intArg(args(1)), intArg(args(2)))
+  }
+
+  /** `minhash_sig` as a Column, for operators that must not depend on a
+    * session's registered SQL functions.
+    */
+  def toCol(
+      text: org.apache.spark.sql.Column,
+      numHashes: Int,
+      shingleSize: Int): org.apache.spark.sql.Column =
+    graft.internal.Cols.of(
+      MinHashSig(graft.internal.Cols.expressionOf(text), numHashes, shingleSize))
 }

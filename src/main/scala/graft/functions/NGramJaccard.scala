@@ -155,17 +155,11 @@ object NGramJaccard {
   def shingleArrayData(text: String, n: Int): org.apache.spark.sql.catalyst.util.GenericArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(shingleHashes(text, n))
 
-  /** Register `ngram_jaccard` on an existing session (tests / REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_jaccard",
-      exprs => {
-        require(exprs.length == 3, "ngram_jaccard(a, b, n)")
-        val n = exprs(2).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Number].intValue()
-        NGramJaccard(exprs.head, exprs(1), n)
-      },
-      "scala_udf")
+  /** Builds `ngram_jaccard(a, b, n)`, the SQL function [[graft.GraftExtensions]] injects. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 3, "ngram_jaccard(a, b, n)")
+    NGramJaccard(args.head, args(1), intArg(args(2)))
+  }
 }
 
 /** `ngram_shingles(text, n)` — the sorted-distinct FNV-1a shingle-hash

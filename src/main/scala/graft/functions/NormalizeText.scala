@@ -62,9 +62,11 @@ object NormalizeText {
   private def isRe2Space(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_text", exprs => NormalizeText(exprs.head), "scala_udf")
+  /** Builds `normalize_text(text)`, the SQL function [[graft.GraftExtensions]] injects. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 1, "normalize_text(text)")
+    NormalizeText(args.head)
+  }
 
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: String): String = {

@@ -87,14 +87,11 @@ object RollingChunks {
     new GenericArrayData(out.toArray)
   }
 
-  /** Register `rolling_chunks` on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_chunks",
-      exprs => {
-        val n = exprs(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Number].intValue()
-        RollingChunks(exprs.head, n)
-      },
-      "scala_udf")
+  /** Builds `rolling_chunks(text, avgChunk)`, the SQL function
+    * [[graft.GraftExtensions]] injects.
+    */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 2, "rolling_chunks(text, avgChunk)")
+    RollingChunks(args.head, intArg(args(1)))
+  }
 }

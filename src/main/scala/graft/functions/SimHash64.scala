@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Implemented as a native Catalyst `Expression` with `doGenCode` (not a
   * Scala UDF): codegen emits a direct static call, so the expression
   * stays inside whole-stage codegen with no Row boxing — the right shape
-  * for a 100 TB scan. Register via [[graft.GraftExtensions]] or
-  * [[SimHash64.register]].
+  * for a 100 TB scan. Registered in SQL by [[graft.GraftExtensions]];
+  * [[SimHash64.toCol]] builds the Column directly.
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
@@ -84,8 +84,15 @@ object SimHash64 {
   /** Hamming distance between two fingerprints (≤ k ⇒ near-dup). */
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /** Register `simhash64` on an existing session (tests / REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
+  /** Builds `simhash64(text)`, the SQL function [[graft.GraftExtensions]] injects. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 1, "simhash64(text)")
+    SimHash64(args.head)
+  }
+
+  /** `simhash64` as a Column, for operators that must not depend on a
+    * session's registered SQL functions.
+    */
+  def toCol(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.internal.Cols.of(SimHash64(graft.internal.Cols.expressionOf(text)))
 }

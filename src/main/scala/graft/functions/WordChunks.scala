@@ -48,6 +48,14 @@ case class WordChunks(child: Expression, size: Int, stride: Int)
 
 object WordChunks {
 
+  /** Builds `word_chunks(text, size, stride)`, the SQL function
+    * [[graft.GraftExtensions]] injects.
+    */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 3, "word_chunks(text, size, stride)")
+    WordChunks(args.head, intArg(args(1)), intArg(args(2)))
+  }
+
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: UTF8String, size: Int, stride: Int): ArrayData = {
     val s = text.toString

@@ -50,6 +50,14 @@ case class WordNGrams(child: Expression, n: Int, distinct: Boolean)
 
 object WordNGrams {
 
+  /** Builds `word_ngrams(text, n, distinct)`, the SQL function
+    * [[graft.GraftExtensions]] injects.
+    */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 3, "word_ngrams(text, n, distinct)")
+    WordNGrams(args.head, intArg(args(1)), boolArg(args(2)))
+  }
+
   /** Token [start, end) offsets into `s`, interleaved (start0, end0,
     * start1, end1, …) in one growable int[] — no per-token boxing.
     * Single-space tokenization, empties dropped (split boundaries only,

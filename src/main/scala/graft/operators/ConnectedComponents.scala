@@ -59,7 +59,8 @@ object ConnectedComponents {
     // the escape hatch for a host where the 2|E|-row cache is unwelcome).
     // Read before any work, so a typo fails at once instead of meaning
     // "auto".
-    val mode = roundMode(spark.conf.getOption("spark.graft.cc.roundMode"))
+    val mode = graft.GraftConf.choice(
+      spark, "spark.graft.cc.roundMode", "auto", Seq("auto", "shuffle"))
     // symmetric closure once. localCheckpoint (eager) MATERIALIZES and
     // TRUNCATES lineage — essential for any iterative dataflow: with
     // plain cache() every round's plan still embeds all previous rounds'
@@ -229,17 +230,6 @@ object ConnectedComponents {
           "the graph diameter exceeds the iteration budget — raise maxIter")
     labels
   }
-
-  /** The `spark.graft.cc.roundMode` value, `auto` when unset.
-    * @throws IllegalArgumentException for any value but auto or shuffle
-    */
-  private def roundMode(conf: Option[String]): String =
-    conf.map(_.trim.toLowerCase).getOrElse("auto") match {
-      case m @ ("auto" | "shuffle") => m
-      case _ =>
-        throw new IllegalArgumentException(
-          s"spark.graft.cc.roundMode must be auto or shuffle, got '${conf.get}'")
-    }
 
   /** Measured in-memory bytes of a materialized localCheckpoint — read
     * off the driver's block-manager listing (no job). None when the

@@ -37,11 +37,11 @@ object Dedup {
   /** Deterministic MinHash signature via the native Catalyst expression
     * [[graft.functions.MinHashSig]] (one codegen'd pass per document; the
     * HOF formulation this replaced was ~150× slower — see MinHashSig
-    * scaladoc). Requires `MinHashSig.register(spark)` — done by
-    * [[minHashCandidates]] and [[graft.GraftExtensions]].
+    * scaladoc). Built from the expression class, so it works on any
+    * session, with or without [[graft.GraftExtensions]].
     */
   def minHashSignature(textCol: String, numHashes: Int, shingleSize: Int): Column =
-    expr(s"minhash_sig($textCol, $numHashes, $shingleSize)")
+    graft.functions.MinHashSig.toCol(col(textCol), numHashes, shingleSize)
 
   /** Bucket-size gate + within-bucket pair expansion, shared by the
     * MinHash and SimHash candidate generators: window-count the
@@ -84,7 +84,6 @@ object Dedup {
       shingleSize: Int = 5,
       maxBucket: Int = 1000): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    graft.functions.MinHashSig.register(df.sparkSession)
     val rows = numHashes / bands
     val sig = minHashSignature(textCol, numHashes, shingleSize)
     val banded = Spread.ensure(df.select(col(idCol), col(textCol)))
@@ -225,9 +224,8 @@ object Dedup {
     * [[graft.functions.SimHash64]].
     */
   def simHashFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.SimHash64.register(df.sparkSession)
     Spread.ensure(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), expr(s"simhash64($textCol)").as("simhash"))
+      .select(col(idCol), graft.functions.SimHash64.toCol(col(textCol)).as("simhash"))
   }
 
   /** SimHash near-duplicate pairs within Hamming distance `maxHamming`,

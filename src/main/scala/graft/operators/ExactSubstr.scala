@@ -105,14 +105,13 @@ object ExactSubstr {
     */
   def autoPassDecision(df: DataFrame): (Int, Long, Long) = {
     val spark = df.sparkSession
+    val perByte = graft.GraftConf.positiveDouble(
+      spark, "spark.graft.exactSubstr.scratchPerInputByte", ScratchPerInputByte)
+    val headroom = graft.GraftConf.positiveDouble(
+      spark, "spark.graft.exactSubstr.scratchHeadroom", ScratchHeadroom)
     val input = Spread.inputBytes(df)
     val free = freeScratchBytes(spark)
-    def dconf(key: String, dflt: Double): Double =
-      spark.conf.getOption(key).flatMap(_.toDoubleOption).getOrElse(dflt)
-    val k = sizePasses(input, free,
-      dconf("spark.graft.exactSubstr.scratchPerInputByte", ScratchPerInputByte),
-      dconf("spark.graft.exactSubstr.scratchHeadroom", ScratchHeadroom))
-    (k, input, free)
+    (sizePasses(input, free, perByte, headroom), input, free)
   }
 
   /** Usable bytes across the session's `spark.local.dir` targets (the
@@ -135,16 +134,17 @@ object ExactSubstr {
     * which a library must not spring on callers by disk state.
     */
   private def digestPasses(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.exactSubstr.passes") match {
-      case Some(v) if v.trim.equalsIgnoreCase("auto") =>
-        val (k, input, free) = autoPassDecision(df)
-        System.err.println(
-          f"[exactSubstr] auto passes=$k (input=${input / 1e9}%.2f GB, " +
-            f"scratch~${ScratchPerInputByte * input / 1e9}%.1f GB at K=1, " +
-            f"free=${free / 1e9}%.1f GB)")
-        k
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(1)
-      case None => 1
+    graft.GraftConf.read(df.sparkSession, "spark.graft.exactSubstr.passes", Option(1),
+      "auto or a positive integer") { v =>
+      if (v.equalsIgnoreCase("auto")) Some(None)
+      else v.toIntOption.filter(_ >= 1).map(Some(_))
+    }.getOrElse {
+      val (k, input, free) = autoPassDecision(df)
+      System.err.println(
+        f"[exactSubstr] auto passes=$k (input=${input / 1e9}%.2f GB, " +
+          f"scratch~${ScratchPerInputByte * input / 1e9}%.1f GB at K=1, " +
+          f"free=${free / 1e9}%.1f GB)")
+      k
     }
 
   /** The (id, pos, digest) window frame — one fused pass per doc builds
@@ -220,12 +220,13 @@ object ExactSubstr {
       minLen: Int = 50): DataFrame = {
     val L = minLen
     require(L >= 2, s"minLen must be >= 2, got $L")
+    val passes = digestPasses(df) // conf read before any work
     val wins = windowDigests(df, idCol, textCol, L)
     // mark: window duplicated corpus-wide (count over the digest key;
     // the only corpus-sized shuffle — or K digest-space slices of it
     // under spark.graft.exactSubstr.passes, each released before the
     // next: see the object scaladoc's scratch bound)
-    val dup = multiPass(wins, digestPasses(df))(markDuplicated)
+    val dup = multiPass(wins, passes)(markDuplicated)
     // merge: gaps-and-islands per doc — window starts p1 < p2 cover a
     // contiguous character run iff p2 ≤ p1 + L
     val byDoc = Window.partitionBy(col("__id")).orderBy(col("pos"))
@@ -297,6 +298,7 @@ object ExactSubstr {
       minLen: Int = 50): DataFrame = {
     val L = minLen
     require(L >= 2, s"minLen must be >= 2, got $L")
+    val passes = digestPasses(df) // conf read before any work
     val wins = windowDigests(df, idCol, textCol, L)
     // Keeper decision — duplicated at all (count ≥ 2) and keeper
     // (min (id, pos)) — as count + row_number over the digest window:
@@ -315,7 +317,7 @@ object ExactSubstr {
         .filter(col("__cnt") >= 2 && col("__rk") > 1)
         .select(col("__id"), col("pos"))
     }
-    val cut = multiPass(wins, digestPasses(df))(cutStage)
+    val cut = multiPass(wins, passes)(cutStage)
     val byDoc = Window.partitionBy(col("__id")).orderBy(col("pos"))
     val spans = cut
       .withColumn("__gap",

@@ -1,8 +1,9 @@
 package graft.operators
 
-/** The deterministic synthetic image corpus shared by q151 and
-  * [[graft.ImageScaleBench]]: docs come in groups of 4 (`g = id / 4`)
-  * whose members are near-duplicate variants of one base image, so the
+/** The deterministic synthetic image corpus shared by q151 and the
+  * image family of [[graft.ScaleSweep]]: docs come in groups of 4
+  * (`g = id / 4`) whose members are near-duplicate variants of one
+  * base image, so the
   * perceptual-hash pipeline has planted within-group pairs and —
   * by the mixing below — essentially no cross-group collisions.
   *

@@ -23,7 +23,7 @@ object QualityRules {
     * the unified memory manager's EXECUTION side (storageFraction
     * protects half the pool from eviction), and the KN scorers' own
     * shuffle-hash builds are the first to starve — q138 at
-    * TextScaleBench's 500k-doc point died UNABLE_TO_ACQUIRE_MEMORY with
+    * the text sweep's 500k-doc point died UNABLE_TO_ACQUIRE_MEMORY with
     * its 60M-row bigram checkpoint resident (r12). Disk blocks read
     * back through the OS page cache; the lineage cut and
     * materialize-once semantics are identical.
@@ -226,7 +226,7 @@ object QualityRules {
     // every model-side join is SHUFFLE_HASH-hinted: the type tables are
     // only small relative to the corpus — they grow with vocabulary²,
     // and a "small enough by estimate" broadcast of a multi-million-row
-    // HashedRelation OOMs the driver (caught by TextScaleBench's
+    // HashedRelation OOMs the driver (caught by the text sweep's
     // 200k-doc point, ~100k-token vocab). Shuffle-hash keeps each
     // build per-partition-sized at any vocabulary; no sort needed on
     // 64-bit hash keys.
@@ -347,10 +347,9 @@ object QualityRules {
     * differently.
     */
   private def knKey(df: DataFrame): Column => Column = {
-    val wide =
-      try df.sparkSession.conf.get("spark.graft.kn.wideKeys").toBoolean
-      catch { case _: java.util.NoSuchElementException => false }
-    if (wide) c => unhex(md5(c)) else c => xxhash64(c)
+    if (graft.GraftConf.bool(df.sparkSession, "spark.graft.kn.wideKeys", default = false))
+      c => unhex(md5(c))
+    else c => xxhash64(c)
   }
 
   /** Within-document repetition: the duplicate-bigram signal. For each

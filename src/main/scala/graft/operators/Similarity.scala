@@ -21,6 +21,13 @@ import scala.collection.parallel.CollectionConverters._
   */
 object Similarity {
 
+  /** Cosine similarity built from the [[graft.functions.CosineSim]]
+    * expression, so every operator here works on any session, whether
+    * or not it installed [[graft.GraftExtensions]].
+    */
+  private def cosine(a: Column, b: Column): Column =
+    graft.functions.CosineSim.toCol(a, b)
+
   /** Monotone suffix for cell-cap observation names: observe() names
     * must be unique within one query, and a caller may compose several
     * blocked passes into a single plan.
@@ -82,7 +89,6 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     // corpus side does |corpus|·|queries| dot products map-side against
     // the broadcast — spread a single-block scan or one core does it all
     val c = Spread.ensure(corpus.select(
@@ -93,7 +99,7 @@ object Similarity {
       toDouble(col(vecCol)).as("__qv"))
     val scored = c
       .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", expr("cosine_sim(__cv, __qv)"))
+      .withColumn("cosine", cosine(col("__cv"), col("__qv")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -308,7 +314,6 @@ object Similarity {
       trainSample: Int = 16384,
       frozenCentroids: Option[Array[Array[Double]]] = None,
       maxCellFactor: Double = 10.0): DataFrame = {
-    graft.functions.CosineSim.register(vecs.sparkSession)
     // candidate generation moves (cell, id) rows ONLY — dedup of the
     // pair list happens on two longs; the 2×dim vector payloads attach
     // ONCE per surviving pair side, never per shared cell.
@@ -399,7 +404,7 @@ object Similarity {
     starters.alias("x")
       .join(cells.alias("y"),
         col("x.__cell") === col("y.__cell") && col("x.__id") < col("y.__id"))
-      .filter(expr("cosine_sim(x.__v, y.__v)") >= tau)
+      .filter(cosine(col("x.__v"), col("y.__v")) >= tau)
       .select(col("x.__id").as("src"), col("y.__id").as("dst"))
       .distinct()
   }
@@ -437,7 +442,6 @@ object Similarity {
       tau: Double,
       centroids: Array[Array[Double]],
       nprobe: Int = 4): DataFrame = {
-    graft.functions.CosineSim.register(history.sparkSession)
     def assigned(df: DataFrame, hist: Boolean): DataFrame =
       df.select(col(idCol).cast("long").as("__iid"),
           toDouble(col(vecCol)).as("__iv"))
@@ -463,7 +467,7 @@ object Similarity {
         col("__pcell") === col("__cell") &&
           col("__iid") =!= col("__bid") &&
           (col("__hist") || col("__iid") < col("__bid")))
-      .filter(expr("cosine_sim(__bv, __iv)") >= tau)
+      .filter(cosine(col("__bv"), col("__iv")) >= tau)
       .groupBy(col("__bid"))
       .agg(
         min(when(col("__hist"), col("__iid"))).as("__hist_id"),
@@ -525,7 +529,6 @@ object Similarity {
       tau: Double,
       centroids: Array[Array[Double]],
       nprobe: Int = 4): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val indexed = corpus
       .select(col(idCol).cast("long").as("__cid"),
         toDouble(col(vecCol)).as("__cv"))
@@ -541,7 +544,7 @@ object Similarity {
           .as("__pcell"))
     probes
       .join(indexed, col("__pcell") === col("__cell"))
-      .filter(expr("cosine_sim(__ev, __cv)") >= tau)
+      .filter(cosine(col("__ev"), col("__cv")) >= tau)
       .groupBy(col("__cid"))
       .agg(count(lit(1)).as("n_eval_hits"), min(col("__eid")).as("eval_id"))
       .select(col("__cid").as(idCol), col("n_eval_hits"), col("eval_id"))
@@ -573,7 +576,6 @@ object Similarity {
       idCol: String,
       vecCol: String,
       tau: Double): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     // spread: the broadcast join's parallelism is the streamed corpus
     // side's split count (the q82 lesson — a single-row-group file
     // caps the whole N·E cosine pass at 1-2 cores)
@@ -583,7 +585,7 @@ object Similarity {
     val e = evalSet
       .select(col(idCol).cast("long").as("__eid"),
         toDouble(col(vecCol)).as("__ev"))
-    c.join(broadcast(e), expr("cosine_sim(__cv, __ev)") >= tau)
+    c.join(broadcast(e), cosine(col("__cv"), col("__ev")) >= tau)
       .groupBy(col("__cid"))
       .agg(count(lit(1)).as("n_eval_hits"), min(col("__eid")).as("eval_id"))
       .select(col("__cid").as(idCol), col("n_eval_hits"), col("eval_id"))
@@ -626,7 +628,6 @@ object Similarity {
       seed: Long = 7L,
       trainSample: Int = 16384,
       frozenCentroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val centroids = frozenCentroids.getOrElse(
       trainQuantizer(corpus, vecCol, numCells, seed, trainSample))
 
@@ -653,7 +654,7 @@ object Similarity {
       .join(broadcast(q), Seq("__cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", expr("cosine_sim(__cv, __qv)"))
+      .withColumn("cosine", cosine(col("__cv"), col("__qv")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -683,7 +684,6 @@ object Similarity {
       dim: Int,
       numTables: Int = 8,
       seed: Long = 7L): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     // All numTables×bits hyperplane dots run in ONE fused native pass per
     // row (table t's planes seeded seed+t — buckets identical to the
     // one-expression-per-table formulation this replaced).
@@ -706,7 +706,7 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("cosine",
-        expr("cosine_sim(__v_neighbor_id, __v_query_id)"))
+        cosine(col("__v_neighbor_id"), col("__v_query_id")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)

@@ -91,7 +91,7 @@ object SortedGroupFold {
     * UNTRACKED heap — the memory manager never sees them, the sort
     * fallback triggers on group count, never bytes, and 32 concurrent
     * tasks × ~100 MB of JVM-object-inflated buffers OOM'd the 8 GB
-    * bench JVM at TextScaleBench's 200k-doc point (r12, q142's id
+    * bench JVM at the text sweep's 200k-doc point (r12, q142's id
     * streams). Here the only per-task memory is the sorter (spillable,
     * tracked) plus one group's output under construction.
     */

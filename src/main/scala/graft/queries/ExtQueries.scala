@@ -50,7 +50,6 @@ object ExtQueries {
     * formulation [[TextAnalysis.languageId]], ~14× faster).
     */
   private def q18(s: SparkSession, d: String): DataFrame = {
-    graft.functions.LangId.register(s)
     Spread.ensure(Tables.documents(s, d).select("doc_id", "text"))
       .select(col("doc_id"), expr("lang_id(text)").as("lang_pred"))
   }
@@ -98,7 +97,6 @@ object ExtQueries {
     * the near-dup surface → oracle-checked).
     */
   private def q23(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NGramJaccard.register(s)
     val t = Spread.ensure(Tables.documents(s, d).select("doc_id", "text"))
     t.alias("a")
       .join(t.alias("b"), col("b.doc_id") === col("a.doc_id") + 1)
@@ -287,7 +285,7 @@ object ExtQueries {
     */
   private def q151(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // pixel kernel + PNG roundtrip shared with ImageScaleBench via
+    // pixel kernel + PNG roundtrip shared with the image sweep via
     // ImageGen (its scaladoc carries the mixing rationale measured here)
     // computeWeight 32 (the media-generator family: q151/q154–q159):
     // each ~120-byte parquet row fans into a synthesized image/clip
@@ -362,8 +360,7 @@ object ExtQueries {
     // wrong #4) — so it gates on a conf, default ON here (the q125/q151
     // exercise-the-codec-in-query license), OFF in AUSCALE's long-clip
     // arms where its cost is priced explicitly
-    val roundtrip =
-      s.conf.getOption("spark.graft.audio.roundtrip").forall(_.toBoolean)
+    val roundtrip = graft.GraftConf.bool(s, "spark.graft.audio.roundtrip", default = true)
     val pcm = Spread.ensure(  // computeWeight: see the q151 A/B note
       Tables.documents(s, d).select(col("doc_id")), computeWeight = 32.0)
       .as[Long].map { id =>
@@ -643,7 +640,6 @@ object ExtQueries {
     * bucketed paths bound candidates at scale.
     */
   private def q33(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Spread.ensure(Tables.embeddings(s, d).select("vec_id", "embedding"))
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
     e.alias("a")
@@ -712,7 +708,6 @@ object ExtQueries {
     * (hash-checked oracle; MinHashAggSpec pins the algebra).
     */
   private def q37(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MinHashSig.register(s)
     import s.implicits._
     // computeWeight 10: q37's kernels (64-hash MinHash here, the full
     // shingle bitmask below) are the suite's highest compute-per-byte
@@ -878,7 +873,6 @@ object ExtQueries {
     * and shift-robustness cases the fixture can't cover).
     */
   private def q43(s: SparkSession, d: String): DataFrame = {
-    graft.functions.RollingChunks.register(s)
     val docs = Tables.documents(s, d)
     val t = docs.select(col("doc_id"), expr("rolling_chunks(text, 64)").as("ch"))
     val pairs = Dedup.sharedChunkPairs(t, "doc_id", "ch")

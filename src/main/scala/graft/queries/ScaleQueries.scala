@@ -46,7 +46,6 @@ object ScaleQueries {
     * force + recursive-CTE closure in DuckDB).
     */
   private def q82(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     // the broadcast self-join's parallelism is the STREAMED side's
     // partition count — a single-row-group corpus file caps the whole
     // N² cosine pass at 1-2 cores (measured 39 s at sf1, ~4 s spread)
@@ -95,7 +94,6 @@ object ScaleQueries {
     * (I+U+0308 → Ï → ï); both engines pin that order.
     */
   private def q84(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NormalizeText.register(s)
     val aug = when(
       col("doc_id") % 4 === 0,
       concat(col("text"), lit(" Cafe\u0301 NAI\u0308VE  End")))
@@ -211,7 +209,6 @@ object ScaleQueries {
     * fails (q70's pattern).
     */
   private def q89(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CmsEstimate.register(s)
     val ev = Tables.events(s, d)
     val sketches = ev.groupBy(col("event_type")).agg(
       expr(f"count_min_sketch(user_id, $CmsEps%.6fd, 0.99d, 42)").as("__sk"),

@@ -303,7 +303,6 @@ object StorageQueries {
     val qDf = probes.toSeq.toDF("query_id", "qv", "probes")
       .withColumn("probe_cell", explode(col("probes")))
       .select(col("query_id"), col("qv"), col("probe_cell").cast("string").as("probe_cell"))
-    graft.functions.CosineSim.register(s)
     val corpus = s.read.parquet(path)
       .filter(col("cell").isin(allCells.map(_.toString): _*)) // literal → directory pruning
     val w = Window.partitionBy(col("query_id"))

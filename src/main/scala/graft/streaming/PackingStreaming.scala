@@ -34,7 +34,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The sort is unavoidable (state transitions must apply in `seq`
   * order); production feeds bound it with trigger sizing
   * (`maxFilesPerTrigger` / `maxOffsetsPerTrigger`), which is also what
-  * [[graft.StreamScaleBench]] measures.
+  * the stream family of [[graft.ScaleSweep]] measures.
   */
 object PackingStreaming {
 

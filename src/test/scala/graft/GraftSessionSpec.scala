@@ -29,11 +29,9 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("BenchHarness.session is GraftSession's session plus the UI off") {
-    // Runs first, on the shared test context (local[4], no
-    // `spark.sql.extensions` in its SparkConf): a context started by
-    // GraftSession.builder carries that static conf, and every later
-    // session on it would resolve the SQL functions whether or not the
-    // harness installs the extensions.
+    // On the shared test context (local[4], no `spark.sql.extensions`
+    // in its SparkConf), a new session resolves the SQL functions only
+    // if the harness installs GraftSession's extensions.
     SparkTestBase.session
     withoutActiveSession {
       val spark = BenchHarness.session()
@@ -60,9 +58,9 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("builder wires tuned defaults and the SQL extension functions") {
-    // Run alone, this test starts the JVM's context (local[2], with
-    // `spark.sql.extensions` in its SparkConf); stop it then, so later
-    // suites do not reuse it. A context that was already running stays.
+    // Run alone, this test starts the JVM's context (local[2]); stop it
+    // then, so later suites do not reuse it. A context that was already
+    // running stays.
     val ownsContext = SparkEnv.get == null
     withoutActiveSession {
       val spark = GraftSession.builder(master = "local[2]", shufflePartitions = 2)
@@ -110,5 +108,29 @@ class GraftSessionSpec extends AnyFunSuite {
         .map(root.relativize(_).toString).toList.sorted
       finally walk.close()
     assert(offenders.isEmpty, s"sessions built outside GraftSession: $offenders")
+  }
+
+  test("every SPARK_GRAFT_ env literal under src/main is on the allowlist") {
+    // per-family knobs grew to thirteen once; a new env var is a
+    // deliberate addition to this list, not a drive-by
+    val allowed = Set(
+      "SPARK_GRAFT_BPE_MERGES", "SPARK_GRAFT_BUILDERCONF", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_ISOLATE", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_OUT_DIR",
+      "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_RUNS", "SPARK_GRAFT_SCALE_K",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SQLCONF")
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    val literal = "\"(SPARK_GRAFT_[A-Z0-9_]*)".r
+    val walk = Files.walk(root)
+    val found =
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p))
+        .flatMap(p => literal.findAllMatchIn(Files.readString(p))
+          .map(m => m.group(1) -> root.relativize(p).toString))
+        .toList
+      finally walk.close()
+    assert(found.map(_._1).toSet.contains("SPARK_GRAFT_ISOLATE"))
+    val unlisted = found.filterNot { case (name, _) => allowed(name) }
+    assert(unlisted.isEmpty, s"env vars not on the allowlist: $unlisted")
   }
 }

@@ -29,5 +29,11 @@ object SparkTestBase {
     // see GraftSession: the stock 128-key fallback turns collect_list/
     // collect_set aggs into external sorts
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
+    // the graft SQL functions, installed the way GraftSession.builder
+    // installs them: per session, not through the static
+    // `spark.sql.extensions` conf, so GraftSessionSpec can still tell a
+    // harness session that bypasses GraftSession.builder from one that
+    // uses it
+    .withExtensions(new GraftExtensions)
     .getOrCreate()
 }

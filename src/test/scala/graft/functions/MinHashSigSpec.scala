@@ -41,7 +41,6 @@ class MinHashSigSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("expression runs inside whole-stage codegen via SQL") {
-    MinHashSig.register(spark)
     val df = spark.range(4)
       .selectExpr("concat('doc text number ', CAST(id AS STRING), ' with content') AS t")
       .selectExpr("minhash_sig(t, 16, 5) AS sig")
@@ -50,5 +49,12 @@ class MinHashSigSpec extends AnyFunSuite with SparkTestBase {
     assert(sigs.distinct.length == 4)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.linesIterator.next().trim.startsWith("*(1) Project"), plan)
+  }
+
+  test("a call with the wrong arity fails naming the signature, not with an index error") {
+    val e = intercept[Exception](spark.sql("SELECT minhash_sig('abc')").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("minhash_sig(text, numHashes, shingleSize)")),
+      e.toString)
   }
 }

@@ -15,7 +15,6 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
   private lazy val docs = graft.Tables.documents(spark, sf)
 
   test("ngram_jaccard == HOF array_intersect/array_union jaccard on corpus pairs") {
-    NGramJaccard.register(spark)
     val t = docs.select("doc_id", "text")
     val native = t.alias("a")
       .join(t.alias("b"), col("b.doc_id") === col("a.doc_id") + 1)
@@ -36,7 +35,6 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("lang_id == column-formulation languageId on the whole corpus") {
-    LangId.register(spark)
     val native = docs.select(col("doc_id"), expr("lang_id(text)").as("l"))
       .as[(Long, String)].collect().toMap
     val column = docs.select(col("doc_id"), TextAnalysis.languageId(col("text")).as("l"))
@@ -215,7 +213,6 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
     val t = docs
       .withColumn("__sh", Cols.of(NGramShingles(Cols.expressionOf(col("text")), 5)))
     val pairs = t.alias("a").join(t.alias("b"), col("b.doc_id") === col("a.doc_id") + 1)
-    graft.functions.NGramJaccard.register(spark)
     val diff = pairs
       .select(
         expr("ngram_jaccard(a.text, b.text, 5)").as("fused"),

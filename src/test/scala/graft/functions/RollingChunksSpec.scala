@@ -36,7 +36,6 @@ class RollingChunksSpec extends AnyFunSuite with SparkTestBase {
   test("deterministic, total on degenerate inputs, SQL-registered") {
     assert(chunks("") == Set.empty[Long])
     assert(chunks("ab") == chunks("ab"))
-    RollingChunks.register(spark)
     val n = spark.range(2)
       .selectExpr("concat('text number ', CAST(id AS STRING), ' with some content repeated content') AS t")
       .selectExpr("size(rolling_chunks(t, 16)) AS n")

@@ -51,7 +51,6 @@ class SimHash64Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("expression evaluates through SQL (registered function) and codegen") {
-    SimHash64.register(spark)
     // spark.range keeps a physical scan in the plan (a local Seq would be
     // constant-folded by ConvertToLocalRelation, bypassing codegen).
     val df = spark.range(3)
@@ -68,7 +67,6 @@ class SimHash64Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("null input yields null, non-string input is rejected") {
-    SimHash64.register(spark)
     val out = Seq(Some("x"), None).toDF("t").selectExpr("simhash64(t) AS h")
       .collect()
     assert(!out(0).isNullAt(0) && out(1).isNullAt(0))

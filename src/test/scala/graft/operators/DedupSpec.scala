@@ -81,7 +81,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("minhash signature is deterministic and length numHashes") {
-    graft.functions.MinHashSig.register(spark)
     val s1 = docs.select(Dedup.minHashSignature("text", 16, 5).as("sig"))
       .as[Seq[Long]].collect()
     val s2 = docs.select(Dedup.minHashSignature("text", 16, 5).as("sig"))

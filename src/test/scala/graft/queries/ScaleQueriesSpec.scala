@@ -29,7 +29,6 @@ class ScaleQueriesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("normalize_text: expression output == compute on corpus docs (codegen path)") {
-    NormalizeText.register(spark)
     val rows = Tables.documents(spark, sf)
       .select(col("text"), expr("normalize_text(text)").as("norm"))
       .as[(String, String)].collect()
@@ -153,7 +152,6 @@ class ScaleQueriesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("cms_estimate: never under-counts, exact in the no-collision regime, memo survives sketch switches") {
-    graft.functions.CmsEstimate.register(spark)
     val out = ScaleQueries.defs("q89_countmin_roundtrip")(spark, sf)
     assert(out.count() > 0)
     assert(out.filter(!col("within_bound")).count() == 0)

@@ -27,10 +27,15 @@ object CandyEtl {
 
   // The four report frames below are single-file CSVs, written by one
   // task (SingleFileCsvSink's coalesce(1)). Each ends in
-  // `repartition(1).sortWithinPartitions(<keys>)`: the frame comes back
-  // totally ordered, its sort runs in that one task, and there is no
-  // range-partition sampling job, which an `orderBy` would add before the
-  // coalesce collapsed its sort into one task anyway.
+  // `coalesce(1).sortWithinPartitions(<keys>)`: the frame comes back
+  // totally ordered and its sort runs in the one writing task, with no
+  // exchange of its own — neither the range-partition sampling job of an
+  // `orderBy` nor the `Exchange SinglePartition` job of a
+  // `repartition(1)`. The coalesce only reaches back to the last shuffle
+  // or persisted input (under AQE a persisted frame is still built at
+  // full width by its own cache stage), so at most the final aggregate
+  // moves into the writing task, and every output row passes through
+  // that task anyway.
 
   /** Explode transactions into priced order lines (P1/P2/P4 + J1).
     *
@@ -107,7 +112,7 @@ object CandyEtl {
         col("quantity"),
         col("sales_price").as("unit_price"),
         col("line_total"))
-      .repartition(1)
+      .coalesce(1)
       .sortWithinPartitions("order_id", "product_id")
 
   /** `products_updated` report frame: every product, stock minus what the
@@ -128,58 +133,74 @@ object CandyEtl {
         col("product_id"),
         col("product_name"),
         col("current_stock").cast(IntegerType).as("current_stock"))
-      .repartition(1)
+      .coalesce(1)
       .sortWithinPartitions("product_id")
 
-  /** `orders` report frame (A1 + D1 + J3): per-order totals joined to the
-    * deduped transaction headers. `num_items` counts cancelled lines (the
-    * golden orders.csv does); transactions whose every line was null-qty
-    * vanish via the inner join — also golden behaviour. One partition,
-    * sorted by order_id.
+  /** Per-order totals from the allocation alone (A1): one row per order
+    * with `order_datetime` and `customer_id` (every line of a transaction
+    * carries its header), `total_amount`, `num_items` and the order's
+    * unrounded profit `Σ(line_total − quantity·cost_to_make)`. Both
+    * [[orders]] and [[dailySummary]] read this frame, so a caller that
+    * writes both should pass it persisted.
+    *
+    * Precondition: a transaction id names one transaction. The header
+    * columns are taken from any one of the order's lines, so two
+    * transactions sharing an id would merge into one order.
+    *
+    * `num_items` counts cancelled lines (the golden orders.csv does);
+    * transactions whose every line was null-qty have no line here and
+    * vanish — also golden behaviour.
     */
-  def orders(transactions: DataFrame, allocated: DataFrame): DataFrame = {
-    val headers = transactions
-      .select(
-        col("transaction_id").as("order_id"),
-        col("timestamp").as("order_datetime"),
-        col("customer_id"))
-      .dropDuplicates("order_id")
-    val summary = allocated
+  def orderTotals(allocated: DataFrame): DataFrame =
+    allocated
       .groupBy("order_id")
       .agg(
+        any_value(col("timestamp")).as("order_datetime"),
+        any_value(col("customer_id")).as("customer_id"),
         round(sum("line_total"), 2).cast(Money).as("total_amount"),
-        count(lit(1)).as("num_items"))
-    summary
-      .join(headers, Seq("order_id"), "inner")
-      .select("order_id", "order_datetime", "customer_id", "total_amount", "num_items")
-      .repartition(1)
-      .sortWithinPartitions("order_id")
-  }
+        count(lit(1)).as("num_items"),
+        sum(col("line_total") - col("quantity") * col("cost_to_make")).as("profit"))
 
-  /** `daily_summary` report frame (A2 + P7 + A3 + J6), date as DateType;
-    * render with [[formatDailySummary]] when writing CSV. One partition,
-    * sorted by date. A caller that also writes `orders` should pass it
-    * persisted, or `orders` is computed twice.
+  /** `orders` report frame over [[orderTotals]]: the five golden columns,
+    * one partition, sorted by order_id.
     */
-  def dailySummary(orders: DataFrame, allocated: DataFrame): DataFrame = {
-    val daily = orders
-      .withColumn("date", to_date(col("order_datetime")))
-      .groupBy("date")
+  def orders(orderTotals: DataFrame): DataFrame =
+    orderTotals
+      .select("order_id", "order_datetime", "customer_id", "total_amount", "num_items")
+      .coalesce(1)
+      .sortWithinPartitions("order_id")
+
+  /** [[orders]] from the transactions and the allocation, for the traced
+    * perfbench leg, which calls this form, until that benchmark's next
+    * openly stated change. `transactions` is unused: the headers come
+    * from the allocated lines.
+    */
+  def orders(transactions: DataFrame, allocated: DataFrame): DataFrame =
+    orders(orderTotals(allocated))
+
+  /** `daily_summary` report frame over [[orderTotals]] (A2 + P7 + A3),
+    * date as DateType; render with [[formatDailySummary]] when writing
+    * CSV. An order's profit counts on its own order date. DECIMAL sums
+    * are exact, so summing the per-order profits gives the per-line sum.
+    * One partition, sorted by date.
+    */
+  def dailySummary(orderTotals: DataFrame): DataFrame =
+    orderTotals
+      .groupBy(to_date(col("order_datetime")).as("date"))
       .agg(
-        count("order_id").as("num_orders"),
-        round(sum("total_amount"), 2).cast(Money).as("total_sales"))
-    val dailyProfit = allocated
-      .withColumn(
-        "line_profit",
-        col("line_total") - col("quantity") * col("cost_to_make"))
-      .withColumn("date", to_date(col("timestamp")))
-      .groupBy("date")
-      .agg(round(sum("line_profit"), 2).cast(Money).as("total_profit"))
-    daily
-      .join(dailyProfit, Seq("date"), "inner")
-      .repartition(1)
+        count(lit(1)).as("num_orders"),
+        round(sum("total_amount"), 2).cast(Money).as("total_sales"),
+        round(sum("profit"), 2).cast(Money).as("total_profit"))
+      .coalesce(1)
       .sortWithinPartitions("date")
-  }
+
+  /** [[dailySummary]] from the allocation, for the traced perfbench leg,
+    * which calls this form, until that benchmark's next openly stated
+    * change. `orders` is unused: the totals are recomputed from
+    * `allocated`.
+    */
+  def dailySummary(orders: DataFrame, allocated: DataFrame): DataFrame =
+    dailySummary(orderTotals(allocated))
 
   /** Golden rendering: `yyyy-MM-dd` (fixes the reference's `yyyy-M-dd`). */
   def formatDailySummary(dailySummary: DataFrame): DataFrame =

@@ -95,11 +95,12 @@ object ConnectedComponents {
     // Regime decision from MEASURED bytes, not estimates: both ck and
     // labels are materialized localCheckpoints, so their true in-memory
     // sizes are on the driver's storage listing for free (no extra job).
-    val ckBytes = storedBytes(ck)
-    val labelsBytes = storedBytes(labels)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val broadcastRounds = mode != "shuffle" &&
-      labelsBytes.exists(b => b > 0 && b <= threshold) && threshold > 0
+    val conf = spark.sessionState.conf
+    val symPartitions = broadcastPartitions(
+      mode, storedBytes(ck), storedBytes(labels), conf.autoBroadcastJoinThreshold,
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.numShufflePartitions)
+    val broadcastRounds = symPartitions.isDefined
     // Broadcast regime (labels measured under the broadcast threshold —
     // every oracle/bench scale, and any production graph whose label
     // table fits an executor): pre-partition the CONSTANT symmetric
@@ -126,20 +127,13 @@ object ConnectedComponents {
     // size, so a small graph runs 1-task rounds (what AQE coalescing
     // produced here anyway) and a big one scales out; never above
     // numShufflePartitions, the width the shuffle regime would use.
-    // Shuffle regime (labels over the threshold, or broadcasting
-    // disabled): keep the lazy union — rounds shuffle as before, and no
-    // 2|E|-row cache is paid for nothing.
-    val sym =
-      if (!broadcastRounds) symBase
-      else {
-        val advisory = spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-        val symBytes = 2L * ckBytes.getOrElse(0L) + labelsBytes.getOrElse(0L)
-        val nSym = math.max(1L, math.min(
-          spark.sessionState.conf.numShufflePartitions.toLong,
-          (symBytes + advisory - 1) / math.max(1L, advisory))).toInt
-        symBase.repartition(nSym, col("src")).persist()
-      }
+    // Shuffle regime (labels over the threshold, a size not measured, or
+    // broadcasting disabled): keep the lazy union — rounds shuffle as
+    // before, and no 2|E|-row cache is paid for nothing.
+    val sym = symPartitions match {
+      case None => symBase
+      case Some(nSym) => symBase.repartition(nSym, col("src")).persist()
+    }
     // Convergence probe: labels are per-vertex non-increasing (each
     // round takes the min over the closed neighborhood, own label
     // included), so for NUMERIC ids Σ component strictly decreases
@@ -235,6 +229,30 @@ object ConnectedComponents {
     * off the driver's block-manager listing (no job). None when the
     * frame is not a checkpoint or its blocks are not (yet) reported.
     */
+  /** The round regime, from the measured checkpoint sizes: the symmetric
+    * relation's partition count when rounds broadcast the labels, `None`
+    * for the shuffle regime. Broadcast needs mode `auto`, a positive
+    * threshold, the labels measured under it, and the edges measured too:
+    * the partition count is sized from both, and an unmeasured size must
+    * not read as zero bytes.
+    */
+  private[operators] def broadcastPartitions(
+      mode: String,
+      ckBytes: Option[Long],
+      labelsBytes: Option[Long],
+      threshold: Long,
+      advisory: Long,
+      maxPartitions: Int): Option[Int] =
+    for {
+      ck <- ckBytes
+      labels <- labelsBytes
+      if mode != "shuffle" && threshold > 0 && labels > 0 && labels <= threshold
+    } yield {
+      val symBytes = 2L * ck + labels
+      math.max(1L, math.min(
+        maxPartitions.toLong, (symBytes + advisory - 1) / math.max(1L, advisory))).toInt
+    }
+
   private def storedBytes(df: DataFrame): Option[Long] =
     df.queryExecution.analyzed
       .collectFirst {

@@ -11,6 +11,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import java.time.LocalDate
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.immutable.ListMap
 
 /** End-to-end candy-store pipeline (reference main.py:141-205, EP1→EP2→EP3),
@@ -22,10 +24,23 @@ import scala.collection.immutable.ListMap
   * there is no per-day driver round-trip — the whole date range is one
   * lineage.
   *
-  * Each report is computed once. `orders` and `daily_summary` each feed a
-  * later frame as well as their own file, so both are persisted; the row
-  * counts in [[Result]] and the cancelled-line count are observed on the
-  * writes themselves, so nothing re-counts a report after it is written.
+  * Each report is computed once, and a Spark job runs only where a data
+  * dependency needs one. Three frames are persisted: the allocated lines
+  * (every report reads them), the per-order totals (`orders` and
+  * `daily_summary` both read them; `daily_summary` needs no second pass
+  * over the lines and no join) and the daily summary (its file and the
+  * forecast fit both read it). The transactions are read once, by the
+  * allocation, and not kept. The row counts in [[Result]] and the
+  * cancelled-line count are observed on the writes themselves, so
+  * nothing re-counts a report after it is written.
+  *
+  * The writes run concurrently, in four branches on a driver pool owned
+  * by [[run]]: line items; `products_updated`; `orders`; and daily
+  * summary → forecast fit → forecast. Each report ends in one task, so
+  * on its own a write leaves most cores idle; overlapped, the branches
+  * use them. Concurrent writes can each submit a job for a shared cache
+  * that is not built yet; the block manager still computes each cached
+  * block once.
   */
 class CandyPipeline(
     spark: SparkSession,
@@ -51,16 +66,20 @@ class CandyPipeline(
       cancelledLines: Long,
       rowsWritten: ListMap[String, Long])
 
-  /** Run all stages and write the five CSV reports. */
+  /** Run all stages and write the five CSV reports. The four independent
+    * write branches run concurrently; if one fails, the others are
+    * cancelled and waited for, and the first failure is rethrown, so no
+    * Spark job of the run outlives this call.
+    */
   def run(): Result = {
-    val transactions = (dimConfig match {
+    val transactions = dimConfig match {
       // live MongoDB when the config opts in (MONGO_ENABLED); the
       // file-backed path otherwise — same selection shape as dimensions
       case Some(cfg) if cfg.mongoTransactions =>
         CandySources.transactions(spark, cfg, start, endInclusive)
       case _ =>
         CandySources.transactions(spark, dataDir, start, endInclusive)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    }
     // dimensions go through live JDBC when the config carries a URL
     // (reference data_processor.py:87-101), CSV fixtures otherwise
     val products = dimConfig match {
@@ -80,21 +99,31 @@ class CandyPipeline(
         allocated.filter(col("day_idx") === lit(endInclusive.toEpochDay))
       else allocated
     val stock = CandyEtl.productsUpdated(products, stockSource)
-    val orders = CandyEtl.orders(transactions, allocated)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val daily = CandyEtl.dailySummary(orders, allocated)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val forecast = forecastFrame(daily)
+    val totals = CandyEtl.orderTotals(allocated).persist(StorageLevel.MEMORY_AND_DISK)
+    val orders = CandyEtl.orders(totals)
+    val daily = CandyEtl.dailySummary(totals).persist(StorageLevel.MEMORY_AND_DISK)
+    // set by the daily branch, which fits it before writing it; reading
+    // that branch's future makes it visible here
+    var forecast: DataFrame = null
 
-    val (lineItemRows, cancelled) = CandyPipeline.writeLineItems(lineItems, outputDir)
+    val written = CandyPipeline.concurrently(spark, Seq(
+      () => CandyPipeline.writeLineItems(lineItems, outputDir),
+      () => Seq(SingleFileCsvSink.write(stock, outputDir, "products_updated.csv")),
+      () => Seq(SingleFileCsvSink.write(orders, outputDir, "orders.csv")),
+      () => {
+        val dailyRows = SingleFileCsvSink.write(
+          CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv")
+        forecast = forecastFrame(daily)
+        Seq(dailyRows, SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv"))
+      }))
+    val Seq(Seq(lineItemRows, cancelled), Seq(stockRows), Seq(orderRows), Seq(dailyRows, forecastRows)) =
+      written
     val rows = ListMap(
       "order_line_items" -> lineItemRows,
-      "products_updated" -> SingleFileCsvSink.write(stock, outputDir, "products_updated.csv"),
-      "orders" -> SingleFileCsvSink.write(orders, outputDir, "orders.csv"),
-      "daily_summary" -> SingleFileCsvSink.write(
-        CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv"),
-      "sales_profit_forecast" ->
-        SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv"))
+      "products_updated" -> stockRows,
+      "orders" -> orderRows,
+      "daily_summary" -> dailyRows,
+      "sales_profit_forecast" -> forecastRows)
     Result(lineItems, stock, orders, daily, forecast, cancelled, rows)
   }
 
@@ -146,10 +175,52 @@ object CandyPipeline {
   /** Write `order_line_items.csv`; returns its row count and the number of
     * cancelled lines (quantity 0), both observed on the one write job.
     */
-  private[pipeline] def writeLineItems(lineItems: DataFrame, outputDir: String): (Long, Long) = {
+  private[pipeline] def writeLineItems(lineItems: DataFrame, outputDir: String): Seq[Long] = {
     val m = SingleFileCsvSink.writeObserved(lineItems, outputDir, "order_line_items.csv",
       count(when(col("quantity") === 0, true)).as("cancelled"))
-    (m(SingleFileCsvSink.Rows).asInstanceOf[Long], m("cancelled").asInstanceOf[Long])
+    Seq(m(SingleFileCsvSink.Rows).asInstanceOf[Long], m("cancelled").asInstanceOf[Long])
+  }
+
+  private val runSeq = new AtomicLong(0L)
+
+  /** Run `branches` on a driver pool of one thread per branch and return
+    * their results in order. Every Spark job a branch starts is in one job
+    * group; when a branch throws, that group is cancelled, every branch is
+    * waited for, and the first failure is rethrown. The pool is shut down
+    * on every path, so no branch and none of its jobs outlives the call.
+    */
+  private[pipeline] def concurrently[T](spark: SparkSession, branches: Seq[() => T]): Seq[T] = {
+    val sc = spark.sparkContext
+    val group = s"graft-candy-run-${runSeq.incrementAndGet()}"
+    val pool = Executors.newFixedThreadPool(branches.size)
+    var pending = branches.size
+    try {
+      val done = new ExecutorCompletionService[T](pool)
+      val futures = branches.map { branch =>
+        done.submit { () =>
+          sc.setJobGroup(group, "candy report writes", interruptOnCancel = true)
+          try branch()
+          finally sc.clearJobGroup()
+        }
+      }
+      var failure: Option[Throwable] = None
+      while (pending > 0) {
+        try done.take().get()
+        catch {
+          case e: ExecutionException if failure.isEmpty =>
+            failure = Some(e.getCause)
+            sc.cancelJobGroup(group)
+          case _: ExecutionException =>
+        }
+        pending -= 1
+      }
+      failure.foreach(throw _)
+      futures.map(_.get())
+    } finally {
+      // only an interrupt while waiting leaves branches running
+      if (pending > 0) sc.cancelJobGroup(group)
+      pool.shutdownNow()
+    }
   }
 
   /** Build from the reference-shaped environment config. */

@@ -22,10 +22,11 @@ import scala.concurrent.{Await, Promise}
   * `coalesce(1)` funnels the final (tiny, already-aggregated) result
   * through one task; it must only ever wrap the last, small stage. Row
   * order inside the file is the order the caller's frame already has:
-  * the candy reports end in `repartition(1).sortWithinPartitions(...)`,
-  * so their sort runs in the one writing task. A global `orderBy` would
-  * sort in the same single task here (the coalesce collapses its stage)
-  * and add a range-sampling job on top.
+  * the candy reports end in `coalesce(1).sortWithinPartitions(...)`, so
+  * their sort runs in the one writing task with no exchange of its own.
+  * A global `orderBy` would sort in the same single task here (the
+  * coalesce collapses its stage) and add a range-sampling job on top;
+  * a `repartition(1)` would add a SinglePartition exchange job.
   *
   * The row count is observed on the write itself (`Dataset.observe`), so
   * counting what was written costs no second job over the frame. It is a

@@ -68,6 +68,64 @@ class CandyEtlEdgeSpec extends AnyFunSuite with SparkTestBase {
     assert(orders(4) == ((1L, "0.00")))         // fully cancelled, still present
   }
 
+  test("orders: the one-argument form over the order totals is the five report columns") {
+    val viaTotals = CandyEtl.orders(CandyEtl.orderTotals(allocated))
+    assert(viaTotals.columns.toSeq ==
+      Seq("order_id", "order_datetime", "customer_id", "total_amount", "num_items"))
+    assert(viaTotals.collect().toSeq == CandyEtl.orders(transactions, allocated).collect().toSeq)
+  }
+
+  /** Two days: day one repeats product 10 in one order and cancels its
+    * second line; day two cancels a line of product 20 and fills one of
+    * product 10; transaction 13 is all null-qty.
+    */
+  private def twoDayAllocated(reloadDaily: Boolean) = {
+    def dayTx(id: Int, day: Int, items: Seq[(Int, Integer)]): Row =
+      Row(id, 1, f"2024-02-$day%02dT0$day:00:00.000000",
+        items.map { case (p, q) => Row(p, s"P$p", q) })
+    val rows = Seq(
+      dayTx(11, 1, Seq((10, 3), (10, 2), (20, 1))),
+      dayTx(12, 1, Seq((20, 2))),
+      dayTx(13, 1, Seq((10, null.asInstanceOf[Integer]))),
+      dayTx(21, 2, Seq((20, 4), (10, 1)))
+    ).asJava
+    val tx = spark.createDataFrame(rows, CandyModel.transactionSchema)
+      .withColumn("tx_seq", monotonically_increasing_id())
+      .withColumn("day_idx", unix_date(to_date(col("timestamp"))).cast("long"))
+    CandyEtl.allocate(CandyEtl.pricedLines(tx, products), reloadDaily)
+  }
+
+  for (reload <- Seq(false, true)) {
+    test(s"daily total_profit from the order totals equals the per-day line sum (reload=$reload)") {
+      val allocated = twoDayAllocated(reload)
+      assert(allocated.filter(col("quantity") === 0).count() > 0, "fixture cancels no line")
+      val daily = CandyEtl.dailySummary(CandyEtl.orderTotals(allocated))
+        .collect().map(r => r.getDate(0).toString -> r.getDecimal(3)).toMap
+      val lineLevel = allocated
+        .groupBy(to_date(col("timestamp")).as("date"))
+        .agg(round(sum(col("line_total") - col("quantity") * col("cost_to_make")), 2)
+          .cast(CandyModel.Money))
+        .collect().map(r => r.getDate(0).toString -> r.getDecimal(1)).toMap
+      assert(daily == lineLevel)
+      // day one: tx 11 fills 3 of product 10 (profit 3.00) and cancels 2 > 1 left;
+      // product 20 fills 1 (1.50), then tx 12 fills 2 more (3.00)
+      assert(daily("2024-02-01").toString == "7.50")
+      // day two: product 20 wants 4 > 1 left and cancels unless stock reloads
+      // (4 × 1.50 = 6.00); product 10 has 1 left (1.00), or 4 after a reload
+      assert(daily("2024-02-02").toString == (if (reload) "7.00" else "1.00"))
+    }
+
+    test(s"orders and daily_summary: the all-null transaction vanishes (reload=$reload)") {
+      val totals = CandyEtl.orderTotals(twoDayAllocated(reload))
+      val orders = CandyEtl.orders(totals).collect()
+        .map(r => r.getInt(0) -> r.getLong(4)).toMap
+      assert(orders == Map(11 -> 3L, 12 -> 1L, 21 -> 2L))
+      val numOrders = CandyEtl.dailySummary(totals).collect()
+        .map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+      assert(numOrders == Map("2024-02-01" -> 2L, "2024-02-02" -> 1L))
+    }
+  }
+
   test("products_updated: unordered products keep stock; partial fills never happen") {
     val stock = CandyEtl.productsUpdated(products, allocated)
       .collect().map(r => r.getInt(0) -> r.getInt(2)).toMap

@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import graft.model.CandyModel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.io.IOException
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
 import scala.collection.mutable.ArrayBuffer
@@ -62,15 +64,20 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
   private val events = ArrayBuffer.empty[SparkListenerEvent]
   private val sentinelGroup = "candy-pipeline-spec-sentinel"
 
-  private lazy val result = {
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = events.synchronized(events += e)
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart | _: SparkListenerSQLExecutionEnd =>
-          events.synchronized(events += e)
-        case _ =>
-      }
+  /** Records job starts and ends and every SQL execution's plans. */
+  private def recorder(seen: ArrayBuffer[SparkListenerEvent]): SparkListener = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized(seen += e)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = seen.synchronized(seen += e)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: SparkListenerSQLExecutionStart | _: SparkListenerSQLExecutionEnd |
+          _: SparkListenerSQLAdaptiveExecutionUpdate =>
+        seen.synchronized(seen += e)
+      case _ =>
     }
+  }
+
+  private lazy val result = {
+    val listener = recorder(events)
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = new CandyPipeline(spark, dataDir.toString, outDir.toString,
@@ -79,6 +86,35 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
       r
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The run's events up to the sentinel, which must have been seen. */
+  private def runEvents: List[SparkListenerEvent] = {
+    result
+    val seen = events.synchronized(events.toList)
+    val sentinel = seen.indexWhere(isSentinel)
+    assert(sentinel >= 0, "sentinel job never reached the listener")
+    seen.take(sentinel)
+  }
+
+  /** Every physical plan an execution showed: the initial one and each
+    * adaptive re-plan, by execution id.
+    */
+  private def plans(seen: Seq[SparkListenerEvent]): Seq[(Long, String)] = seen.collect {
+    case s: SparkListenerSQLExecutionStart => s.executionId -> s.physicalPlanDescription
+    case u: SparkListenerSQLAdaptiveExecutionUpdate => u.executionId -> u.physicalPlanDescription
+  }
+
+  private val reportNames = Seq(
+    "order_line_items", "products_updated", "orders", "daily_summary", "sales_profit_forecast")
+
+  /** The SQL executions that wrote each report, by report name. */
+  private def reportWrites(seen: Seq[SparkListenerEvent]): Map[String, Set[Long]] =
+    reportNames.map { name =>
+      name -> seen.collect {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains(s".__tmp_$name.csv") => s.executionId
+      }.toSet
+    }.toMap
 
   /** Run the sentinel job and wait until `seen` holds its start. The bus
     * delivers in order: once the sentinel job is seen, every event posted
@@ -152,23 +188,80 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("no Spark job starts after the last report is written") {
-    result
-    val seen = events.synchronized(events.toList)
-    val sentinel = seen.indexWhere(isSentinel)
-    assert(sentinel >= 0, "sentinel job never reached the listener")
-    val forecastWrites = seen.collect {
-      case s: SparkListenerSQLExecutionStart
-          if s.physicalPlanDescription.contains(".__tmp_sales_profit_forecast.csv") =>
-        s.executionId
-    }.toSet
-    assert(forecastWrites.nonEmpty, "no SQL execution wrote the forecast")
+    val seen = runEvents
+    val writes = reportWrites(seen)
+    writes.foreach { case (name, ids) => assert(ids.nonEmpty, s"no SQL execution wrote $name") }
+    val allWrites = writes.values.flatten.toSet
     val lastWriteEnd = seen.lastIndexWhere {
-      case e: SparkListenerSQLExecutionEnd => forecastWrites(e.executionId)
+      case e: SparkListenerSQLExecutionEnd => allWrites(e.executionId)
       case _ => false
     }
-    assert(lastWriteEnd >= 0 && lastWriteEnd < sentinel)
-    val after = seen.slice(lastWriteEnd + 1, sentinel).collect { case j: SparkListenerJobStart => j.jobId }
-    assert(after.isEmpty, s"jobs $after started after the forecast write")
+    assert(lastWriteEnd >= 0, "no report write ended before the sentinel")
+    val after = seen.drop(lastWriteEnd + 1).collect { case j: SparkListenerJobStart => j.jobId }
+    assert(after.isEmpty, s"jobs $after started after the last report write")
+  }
+
+  test("a run starts at most 18 Spark jobs") {
+    // 18 measured with the four write branches concurrent: each query that
+    // starts while a shared cache is unbuilt submits its own job for that
+    // cache stage (15 when the branches run one after another). 23 with
+    // the transactions persisted, the header join and a repartition(1)
+    // per report.
+    val jobs = runEvents.collect { case j: SparkListenerJobStart => j.jobId }
+    assert(jobs.size <= 18, s"${jobs.size} jobs: $jobs")
+  }
+
+  test("no report write plans an Exchange SinglePartition") {
+    val seen = runEvents
+    val writes = reportWrites(seen).values.flatten.toSet
+    // the simple plan string and the formatted one, which puts each
+    // node's arguments on a line of their own
+    val exchange = """Exchange SinglePartition|\(\d+\) Exchange\nInput \[.*\]\nArguments: SinglePartition""".r
+    val single = plans(seen).collect {
+      case (id, plan) if writes(id) && exchange.findFirstIn(plan).isDefined => id
+    }.distinct
+    assert(single.isEmpty, s"executions $single plan a SinglePartition exchange")
+  }
+
+  test("no plan persists the transactions") {
+    // an InMemoryRelation's output list, in the simple or the formatted
+    // plan string
+    val relation = """InMemoryRelation(?:\nArguments:)? \[([^\]]*)\]""".r
+    val txColumns = CandyModel.transactionSchema.fieldNames.map(_ + "#")
+    val overTx = plans(runEvents).collect {
+      case (id, plan) if relation.findAllMatchIn(plan)
+          .exists(m => txColumns.forall(m.group(1).contains)) => id
+    }.distinct
+    assert(overTx.isEmpty, s"executions $overTx hold an InMemoryRelation over the transactions")
+  }
+
+  test("a failed write cancels or awaits the others; no job outlives run()") {
+    val out = Files.createTempDirectory("candy_failing")
+    out.toFile.deleteOnExit()
+    // a non-empty directory where orders.csv must go: its write job
+    // succeeds, then replacing the target fails on the driver
+    Files.createDirectories(out.resolve("orders.csv"))
+    Files.writeString(out.resolve("orders.csv").resolve("keep"), "x")
+    val seen = ArrayBuffer.empty[SparkListenerEvent]
+    val listener = recorder(seen)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[IOException] {
+        new CandyPipeline(spark, dataDir.toString, out.toString,
+          LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run()
+      }
+      assert(e.getMessage.contains(out.resolve("orders.csv").toString), e.getMessage)
+      runSentinel(seen)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val all = seen.synchronized(seen.toList)
+    val sentinel = all.indexWhere(isSentinel)
+    assert(sentinel >= 0, "sentinel job never reached the listener")
+    val started = all.take(sentinel).collect { case j: SparkListenerJobStart => j.jobId }
+    val ended = all.take(sentinel).collect { case j: SparkListenerJobEnd => j.jobId }.toSet
+    assert(started.nonEmpty, "the run started no job")
+    assert(started.forall(ended), s"jobs ${started.filterNot(ended)} outlived run()")
+    val later = all.drop(sentinel + 1).collect { case j: SparkListenerJobStart => j.jobId }
+    assert(later.isEmpty, s"jobs $later started after run() returned")
   }
 
   test("inverted date range: fails before any Spark job, names both dates") {

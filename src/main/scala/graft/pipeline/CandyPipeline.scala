@@ -38,9 +38,9 @@ import scala.collection.immutable.ListMap
   * by [[run]]: line items; `products_updated`; `orders`; and daily
   * summary → forecast fit → forecast. Each report ends in one task, so
   * on its own a write leaves most cores idle; overlapped, the branches
-  * use them. Concurrent writes can each submit a job for a shared cache
-  * that is not built yet; the block manager still computes each cached
-  * block once.
+  * use them. Under AQE, each write that starts while a shared cache is
+  * not built yet submits its own job for that cache stage, so a run
+  * starts a few more jobs than a serial one, on otherwise idle cores.
   */
 class CandyPipeline(
     spark: SparkSession,

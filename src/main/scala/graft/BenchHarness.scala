@@ -114,14 +114,17 @@ object BenchHarness {
     * drain API, so this polls THIS SESSION's scratch dirs — the block
     * manager's local dirs (via reflection on `SparkEnv`, the only route
     * to `DiskBlockManager.localDirs`; falls back to the JVM-tmpdir
-    * "blockmgr-"/"spark-" walk if the private API moved) — until their
-    * total size holds for TWO consecutive 500 ms samples, with a
-    * bounded wait, then collects once more for stragglers whose weak
-    * refs surfaced during the poll. Restricting the walk to our own
-    * dirs matters on a shared bench host: another Spark process's
-    * scratch churn under the same tmpdir would otherwise keep the
-    * global size unstable and stall every between-query gap to the
-    * full timeout (r13 ADVICE). Call OUTSIDE the timed window.
+    * "blockmgr-"/"spark-" walk if the private API moved) — every 50 ms
+    * until their total size has held for 300 ms, with a bounded wait. The cleaner polls its
+    * reference queue every 100 ms, so a drain the collection started
+    * shows within that window. Only when the size moved does a second
+    * round collect once more, for stragglers whose weak refs surfaced
+    * during the poll; with nothing to drain the call returns after one
+    * collection and one window. Restricting the walk to our own dirs
+    * matters on a shared bench host: another Spark process's scratch
+    * churn under the same tmpdir would otherwise keep the global size
+    * unstable and stall every between-query gap to the full timeout
+    * (r13 ADVICE). Call OUTSIDE the timed window.
     */
   def quiesce(spark: SparkSession, timeoutMs: Long = 120000L): Unit = {
     dropCheckpointBlocks(spark)
@@ -130,23 +133,31 @@ object BenchHarness {
       if (f.isFile) f.length
       else Option(f.listFiles).getOrElse(Array.empty[java.io.File]).map(walk).sum
     def scratchBytes: Long = roots.map(walk).sum
-    val t0 = System.currentTimeMillis()
-    var rounds = 0
-    while (rounds < 2 && System.currentTimeMillis() - t0 < timeoutMs) {
+    val deadline = System.currentTimeMillis() + timeoutMs
+    // collect, then wait until the size holds; whether it moved meanwhile
+    def settled(): Boolean = {
       System.gc()
-      var prev = -1L
-      var cur = scratchBytes
-      var stable = 0
-      // stability = the size unchanged across TWO consecutive samples
-      while (stable < 2 && System.currentTimeMillis() - t0 < timeoutMs) {
-        Thread.sleep(500)
-        prev = cur
-        cur = scratchBytes
-        if (cur == prev) stable += 1 else stable = 0
+      val first = scratchBytes
+      var cur = first
+      var heldSince = System.currentTimeMillis()
+      while (System.currentTimeMillis() - heldSince < QuiesceStableMs &&
+          System.currentTimeMillis() < deadline) {
+        Thread.sleep(QuiesceSampleMs)
+        val next = scratchBytes
+        if (next != cur) {
+          cur = next
+          heldSince = System.currentTimeMillis()
+        }
       }
-      rounds += 1
+      cur != first
     }
+    if (settled()) settled()
   }
+
+  // how long the scratch size must hold for quiesce, and how often it
+  // is sampled meanwhile
+  private val QuiesceStableMs = 300L
+  private val QuiesceSampleMs = 50L
 
   /** This JVM's Spark scratch roots. `DiskBlockManager.localDirs` (the
     * dirs shuffle files, spilled sorts, and disk-persisted blocks land

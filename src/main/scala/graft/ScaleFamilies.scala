@@ -23,7 +23,8 @@ object ScaleFamilies {
     "image" -> (_ => Image),
     "audio" -> (_ => Audio),
     "stream" -> (_ => StreamFamily),
-    "crossover" -> (_ => Crossover))
+    "crossover" -> (_ => Crossover),
+    "candy" -> (_ => Candy))
 
   val names: Seq[String] = registry.map(_._1)
 
@@ -793,6 +794,91 @@ object ScaleFamilies {
       val s = secs.toMap
       if (s.contains("exact_sec") && s.contains("blocked_sec"))
         Seq("speedup" -> f"${s("exact_sec") / s("blocked_sec")}%.2f")
+      else Nil
+    }
+  }
+
+  /** The paper's batch job at rising size (the candy ladder): ten days of
+    * `n` transactions each from `perfbench/gen_candy.py` (seed 7), every
+    * rung run by `CandyPipeline.run` in both regimes of
+    * [[pipeline.CandyPipeline.adaptive]] and checked byte for byte
+    * against the sequential replay `tools/gen_candy_golden.py`, whose
+    * time is recorded too. Each point carries the bytes the run scans,
+    * in total and per core; the committed record (`CANDYSCALE.json`)
+    * places [[pipeline.CandyPipeline.SmallInputBytesPerCore]] between the
+    * last rung the non-adaptive regime wins and the first it loses.
+    */
+  object Candy extends Family(
+      "candy_scale", "tx_per_day", Seq(1000, 3000, 6000, 10000, 15000, 25000, 40000, 60000),
+      _.min) {
+    private val days = 10
+    // gen_candy.py's first day
+    private val start = java.time.LocalDate.of(2024, 2, 1)
+    private val end = start.plusDays(days - 1)
+    private val reports = Seq("order_line_items", "products_updated", "orders", "daily_summary")
+
+    override def header(arms: Seq[String]): Seq[(String, String)] = Seq(
+      "days" -> days.toString, "cores" -> cpus.toString)
+
+    private def sh(cmd: String*): Unit = {
+      val code = new ProcessBuilder(cmd: _*).inheritIO().start().waitFor()
+      require(code == 0, s"${cmd.mkString(" ")} exited $code")
+    }
+
+    def input(spark: SparkSession, n: Int): String = {
+      val dir = s"/tmp/graft_candyscale_$n"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      sh("python3", "perfbench/gen_candy.py", s"$dir/data", "7", days.toString, n.toString)
+      dir
+    }
+
+    /** The replay's reports with the engine's LF line ends. */
+    override def setup(spark: SparkSession, p: Point): Seq[(String, String)] = {
+      val golden = new java.io.File(s"${p.dir}/golden")
+      golden.mkdirs()
+      val (_, replay) = clock(sh("python3", "tools/gen_candy_golden.py", s"${p.dir}/data", golden.getPath))
+      reports.foreach { r =>
+        val f = new java.io.File(golden, s"$r.csv")
+        java.nio.file.Files.writeString(f.toPath,
+          java.nio.file.Files.readString(f.toPath).replace("\r\n", "\n"))
+      }
+      val bytes = sources.CandySources.scannedBytes(
+        sources.CandySources.transactions(spark, s"${p.dir}/data", start, end),
+        sources.CandySources.products(spark, s"${p.dir}/data")).get
+      val cores = spark.sparkContext.defaultParallelism
+      Seq(
+        "scanned_bytes" -> bytes.toString,
+        "bytes_per_core" -> (bytes / cores).toString,
+        "replay_sec" -> f"$replay%.2f")
+    }
+
+    def arms(spark: SparkSession): Seq[Arm] = {
+      def regime(name: String, adaptive: Boolean) = Arm(name) { p =>
+        val out = s"${p.dir}/out_$name"
+        val (_, sec) = clock(new pipeline.CandyPipeline(spark, s"${p.dir}/data", out, start, end)
+          .run(_ => adaptive))
+        val identical = reports.forall { r =>
+          java.util.Arrays.equals(
+            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out, s"$r.csv")),
+            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.dir, "golden", s"$r.csv")))
+        }
+        Run(sec, Seq("identical" -> identical.toString))
+      }
+      Seq(regime("adaptive", adaptive = true), regime("non_adaptive", adaptive = false))
+    }
+
+    override def reps(n: Int): Int = if (n <= 15000) 7 else 5
+
+    override def nested: Boolean = true
+
+    override def interleaved: Boolean = true
+
+    override def summary(
+        spark: SparkSession, p: Point, secs: Seq[(String, Double)],
+        skipped: Seq[String]): Seq[(String, String)] = {
+      val s = secs.toMap
+      if (s.contains("adaptive") && s.contains("non_adaptive"))
+        Seq("non_adaptive_speedup" -> f"${s("adaptive") / s("non_adaptive")}%.2f")
       else Nil
     }
   }

@@ -21,7 +21,9 @@ import scala.jdk.CollectionConverters._
   *  - one untimed warm run per arm on the family's warm input (JIT and
   *    class loading);
   *  - per point, the family's setup, then `reps` timed runs per arm
-  *    with [[BenchHarness.quiesce]] after each, outside its window (the
+  *    (in alternating rounds over the arms when the family is
+  *    `interleaved`) with [[BenchHarness.quiesce]] after each, outside
+  *    its window (the
   *    2M-doc cleaner echo, and the forced collection that keeps the
   *    multi-hundred-MB text points alive: see quiesce);
   *  - min/med/max wherever a point takes more than one rep;
@@ -80,6 +82,12 @@ object ScaleSweep {
       * `"arm":sec,<fields>`.
       */
     def nested: Boolean = false
+    /** Time a point's in-process arms in rounds, one rep of each per
+      * round in alternating order, instead of all reps of one arm after
+      * the other: for arms that are two ways of doing the same work,
+      * where host drift must reach both alike.
+      */
+    def interleaved: Boolean = false
   }
 
   /** The seconds `f` takes. */
@@ -146,11 +154,15 @@ object ScaleSweep {
     val points = sizes.zipWithIndex.map { case (n, i) =>
       val p = Point(n, dirs(n), first = i == 0)
       val opening = fam.setup(spark, p)
-      val ran = arms.filter(_.at(p)).map { a =>
+      val here = arms.filter(_.at(p))
+      val rounds =
+        if (fam.interleaved) inRounds(spark, fam, here.filterNot(a => isolated(a.name)), p)
+        else Map.empty[String, Seq[Run]]
+      val ran = here.map { a =>
         log(family, s"running ${a.name} @ $n" + (if (isolated(a.name)) " (fresh JVM)" else ""))
         val runs =
           if (isolated(a.name)) inFreshJvm(family, a, p, warm)
-          else measure(spark, fam, a, p)
+          else rounds.getOrElse(a.name, measure(spark, fam, a, p))
         val secs = runs.map(_.sec).sorted
         log(family, s"${a.name} @ $n = " + secs.map(s => f"$s%.2f").mkString("/") + " s" +
           runs.last.fields.map { case (k, v) => s" $k=$v" }.mkString)
@@ -177,6 +189,18 @@ object ScaleSweep {
       BenchHarness.quiesce(spark)
       r
     }
+
+  /** `reps` rounds over `arms`, each arm once per round, the order
+    * reversed every other round; each arm's runs in round order.
+    */
+  private def inRounds(spark: SparkSession, fam: Family, arms: Seq[Arm], p: Point): Map[String, Seq[Run]] =
+    (1 to fam.reps(p.n)).flatMap { i =>
+      (if (i % 2 == 1) arms else arms.reverse).map { a =>
+        val r = a.run(p)
+        BenchHarness.quiesce(spark)
+        a.name -> r
+      }
+    }.groupBy(_._1).map { case (name, runs) => name -> runs.map(_._2) }
 
   /** An arm's record entries: its seconds (one rep: a number; more:
     * min/med/max) and its counted fields from the last rep.

@@ -143,9 +143,13 @@ object CandyEtl {
     * [[orders]] and [[dailySummary]] read this frame, so a caller that
     * writes both should pass it persisted.
     *
-    * Precondition: a transaction id names one transaction. The header
-    * columns are taken from any one of the order's lines, so two
-    * transactions sharing an id would merge into one order.
+    * Precondition: a transaction id names one transaction, so grouping
+    * by the header columns as well as the id yields one row per order.
+    * Two transactions sharing an id would give two rows for it. The
+    * header is a grouping key, not an aggregated value, because the
+    * timestamp is a string: an aggregate buffer holding one (such as
+    * `any_value`) is not fixed-width, and the aggregate would fall back
+    * to a sort-based plan with two sorts.
     *
     * `num_items` counts cancelled lines (the golden orders.csv does);
     * transactions whose every line was null-qty have no line here and
@@ -153,10 +157,8 @@ object CandyEtl {
     */
   def orderTotals(allocated: DataFrame): DataFrame =
     allocated
-      .groupBy("order_id")
+      .groupBy(col("order_id"), col("timestamp").as("order_datetime"), col("customer_id"))
       .agg(
-        any_value(col("timestamp")).as("order_datetime"),
-        any_value(col("customer_id")).as("customer_id"),
         round(sum("line_total"), 2).cast(Money).as("total_amount"),
         count(lit(1)).as("num_items"),
         sum(col("line_total") - col("quantity") * col("cost_to_make")).as("profit"))

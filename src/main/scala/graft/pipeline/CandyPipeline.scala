@@ -14,12 +14,13 @@ import java.time.LocalDate
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end candy-store pipeline (reference main.py:141-205, EP1→EP2→EP3),
   * producing the five reports of SURVEY.md §1.2 as single-file CSVs.
   *
   * Structural fixes over the reference, besides the distributed allocator:
-  * the date range is read in ONE scan and persisted (the reference re-scans
+  * the date range is read in ONE scan (the reference re-scans
   * MongoDB per day in both EP1 and EP2, data_processor.py:176,310-313), and
   * there is no per-day driver round-trip — the whole date range is one
   * lineage.
@@ -29,18 +30,30 @@ import scala.collection.immutable.ListMap
   * (every report reads them), the per-order totals (`orders` and
   * `daily_summary` both read them; `daily_summary` needs no second pass
   * over the lines and no join) and the daily summary (its file and the
-  * forecast fit both read it). The transactions are read once, by the
-  * allocation, and not kept. The row counts in [[Result]] and the
-  * cancelled-line count are observed on the writes themselves, so
-  * nothing re-counts a report after it is written.
+  * forecast fit both read it). All three are unpersisted before [[run]]
+  * returns or throws, so nothing the run cached outlives it in a shared
+  * session. The transactions are read once, by the allocation, and not
+  * kept. The row counts in [[Result]] and the cancelled-line count are
+  * observed on the writes themselves, so nothing re-counts a report
+  * after it is written.
   *
-  * The writes run concurrently, in four branches on a driver pool owned
-  * by [[run]]: line items; `products_updated`; `orders`; and daily
-  * summary → forecast fit → forecast. Each report ends in one task, so
-  * on its own a write leaves most cores idle; overlapped, the branches
-  * use them. Under AQE, each write that starts while a shared cache is
-  * not built yet submits its own job for that cache stage, so a run
-  * starts a few more jobs than a serial one, on otherwise idle cores.
+  * The writes run concurrently, in five branches on a driver pool owned
+  * by [[run]]: line items; `products_updated`; `orders`; daily summary;
+  * and forecast fit → forecast. Each report ends in one task, so on its
+  * own a write leaves most cores idle; overlapped, the branches use them.
+  *
+  * The regime is picked per run from the bytes the sources scan
+  * ([[CandyPipeline.adaptive]]). Small inputs run with AQE off: each
+  * write is then one job whose stages share the cached frames' shuffle
+  * stages, and the allocation folds its products in one hash partition
+  * per core. Under AQE every shuffle and cache stage is a job of its
+  * own, each write that starts while a shared cache is not built yet
+  * submits its own job for that cache stage, and at this size AQE
+  * coalesces the allocation's shuffle into one task. Large inputs keep
+  * AQE, whose coalesced partitions stay balanced where a few fixed hash
+  * partitions do not. The session's AQE flag is set for the duration of
+  * the run and restored on every path; the session is not to be shared
+  * with concurrent work while a run is in flight.
   */
 class CandyPipeline(
     spark: SparkSession,
@@ -66,12 +79,18 @@ class CandyPipeline(
       cancelledLines: Long,
       rowsWritten: ListMap[String, Long])
 
-  /** Run all stages and write the five CSV reports. The four independent
-    * write branches run concurrently; if one fails, the others are
-    * cancelled and waited for, and the first failure is rethrown, so no
-    * Spark job of the run outlives this call.
+  /** Run all stages and write the five CSV reports, in the regime
+    * [[CandyPipeline.adaptive]] picks for the bytes the sources scan and
+    * the context's cores. The five write branches run concurrently; if
+    * one fails, the others are cancelled and waited for, and the first
+    * failure is rethrown, so no Spark job of the run outlives this call.
     */
-  def run(): Result = {
+  def run(): Result = run(CandyPipeline.adaptive(_, spark.sparkContext.defaultParallelism))
+
+  /** [[run]] with the regime taken from `adaptive`, given the scanned
+    * bytes (`None` when a source cannot tell them).
+    */
+  private[graft] def run(adaptive: Option[Long] => Boolean): Result = {
     val transactions = dimConfig match {
       // live MongoDB when the config opts in (MONGO_ENABLED); the
       // file-backed path otherwise — same selection shape as dimensions
@@ -87,44 +106,58 @@ class CandyPipeline(
       case _ => CandySources.products(spark, dataDir)
     }
 
-    val allocated = CandyEtl
-      .allocate(CandyEtl.pricedLines(transactions, products), reloadInventoryDaily)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val conf = spark.conf
+    val callerAqe = conf.getAll.get(CandyPipeline.Aqe)
+    conf.set(CandyPipeline.Aqe, adaptive(CandySources.scannedBytes(transactions, products)))
+    val persisted = ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      persisted += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      val allocated = persist(
+        CandyEtl.allocate(CandyEtl.pricedLines(transactions, products), reloadInventoryDaily))
 
-    val lineItems = CandyEtl.orderLineItems(allocated)
-    // Under daily inventory reload, "current stock" means stock after the
-    // LAST business day (each day started from full stock).
-    val stockSource =
-      if (reloadInventoryDaily)
-        allocated.filter(col("day_idx") === lit(endInclusive.toEpochDay))
-      else allocated
-    val stock = CandyEtl.productsUpdated(products, stockSource)
-    val totals = CandyEtl.orderTotals(allocated).persist(StorageLevel.MEMORY_AND_DISK)
-    val orders = CandyEtl.orders(totals)
-    val daily = CandyEtl.dailySummary(totals).persist(StorageLevel.MEMORY_AND_DISK)
-    // set by the daily branch, which fits it before writing it; reading
-    // that branch's future makes it visible here
-    var forecast: DataFrame = null
+      val lineItems = CandyEtl.orderLineItems(allocated)
+      // Under daily inventory reload, "current stock" means stock after the
+      // LAST business day (each day started from full stock).
+      val stockSource =
+        if (reloadInventoryDaily)
+          allocated.filter(col("day_idx") === lit(endInclusive.toEpochDay))
+        else allocated
+      val stock = CandyEtl.productsUpdated(products, stockSource)
+      val totals = persist(CandyEtl.orderTotals(allocated))
+      val orders = CandyEtl.orders(totals)
+      val daily = persist(CandyEtl.dailySummary(totals))
+      // set by the forecast branch; reading that branch's future makes it
+      // visible here
+      var forecast: DataFrame = null
 
-    val written = CandyPipeline.concurrently(spark, Seq(
-      () => CandyPipeline.writeLineItems(lineItems, outputDir),
-      () => Seq(SingleFileCsvSink.write(stock, outputDir, "products_updated.csv")),
-      () => Seq(SingleFileCsvSink.write(orders, outputDir, "orders.csv")),
-      () => {
-        val dailyRows = SingleFileCsvSink.write(
-          CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv")
-        forecast = forecastFrame(daily)
-        Seq(dailyRows, SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv"))
-      }))
-    val Seq(Seq(lineItemRows, cancelled), Seq(stockRows), Seq(orderRows), Seq(dailyRows, forecastRows)) =
-      written
-    val rows = ListMap(
-      "order_line_items" -> lineItemRows,
-      "products_updated" -> stockRows,
-      "orders" -> orderRows,
-      "daily_summary" -> dailyRows,
-      "sales_profit_forecast" -> forecastRows)
-    Result(lineItems, stock, orders, daily, forecast, cancelled, rows)
+      val written = CandyPipeline.concurrently(spark, Seq(
+        () => CandyPipeline.writeLineItems(lineItems, outputDir),
+        () => Seq(SingleFileCsvSink.write(stock, outputDir, "products_updated.csv")),
+        () => Seq(SingleFileCsvSink.write(orders, outputDir, "orders.csv")),
+        () => Seq(SingleFileCsvSink.write(
+          CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv")),
+        () => {
+          forecast = forecastFrame(daily)
+          Seq(SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv"))
+        }))
+      val Seq(Seq(lineItemRows, cancelled), Seq(stockRows), Seq(orderRows), Seq(dailyRows),
+        Seq(forecastRows)) = written
+      val rows = ListMap(
+        "order_line_items" -> lineItemRows,
+        "products_updated" -> stockRows,
+        "orders" -> orderRows,
+        "daily_summary" -> dailyRows,
+        "sales_profit_forecast" -> forecastRows)
+      Result(lineItems, stock, orders, daily, forecast, cancelled, rows)
+    } finally {
+      // dependents first: freeing a cache that a live one was built on
+      // would re-plan the dependent one
+      persisted.reverseIterator.foreach(_.unpersist())
+      callerAqe.fold(conf.unset(CandyPipeline.Aqe))(conf.set(CandyPipeline.Aqe, _))
+    }
   }
 
   /** Fit sales + profit series and emit the forecast frame
@@ -172,6 +205,25 @@ class CandyPipeline(
 }
 
 object CandyPipeline {
+  private val Aqe = "spark.sql.adaptive.enabled"
+
+  /** Scanned bytes per core at or under which a run is non-adaptive.
+    * Placed by the candy ladder (`CANDYSCALE.json`, `ScaleSweep candy`,
+    * 4 cores): between the last rung the non-adaptive regime won
+    * (7.4 MB per core) and the first it lost (11.1 MB per core).
+    */
+  private[graft] val SmallInputBytesPerCore: Long = 8L << 20
+
+  /** Whether a run over `scannedBytes` on `cores` cores runs under AQE.
+    * At or under [[SmallInputBytesPerCore]] per core it does not: every
+    * shuffle and cache stage would be a job of its own, and AQE would
+    * coalesce the allocation's shuffle into one task. Above it, AQE's
+    * balanced, coalesced partitions win. An unknown size (a MongoDB or
+    * JDBC source) keeps AQE.
+    */
+  def adaptive(scannedBytes: Option[Long], cores: Int): Boolean =
+    scannedBytes.forall(_ > SmallInputBytesPerCore * cores)
+
   /** Write `order_line_items.csv`; returns its row count and the number of
     * cancelled lines (quantity 0), both observed on the one write job.
     */

@@ -14,7 +14,8 @@ class ScaleSweepSpec extends AnyFunSuite with SparkTestBase {
     val arms = ScaleFamilies.names.map(name =>
       name -> ScaleFamilies.named(name, sf).arms(spark).map(_.name))
     assert(arms.map(_._1) == Seq(
-      "text", "graph", "warehouse", "pq", "embed", "image", "audio", "stream", "crossover"))
+      "text", "graph", "warehouse", "pq", "embed", "image", "audio", "stream", "crossover",
+      "candy"))
     val queryName = "q\\d+_.*".r
     val timedQueries = for {
       (family, names) <- arms

@@ -76,12 +76,24 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  private val aqe = "spark.sql.adaptive.enabled"
+
+  /** The persistent RDDs and the session's explicitly set AQE flag, before
+    * and after the run.
+    */
+  private var persistedAround: (Set[Int], Set[Int]) = _
+  private var aqeAround: (Option[String], Option[String]) = _
+
   private lazy val result = {
     val listener = recorder(events)
     spark.sparkContext.addSparkListener(listener)
     try {
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val flag = spark.conf.getAll.get(aqe)
       val r = new CandyPipeline(spark, dataDir.toString, outDir.toString,
         LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run()
+      persistedAround = (persisted, spark.sparkContext.getPersistentRDDs.keySet.toSet)
+      aqeAround = (flag, spark.conf.getAll.get(aqe))
       runSentinel(events)
       r
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -201,14 +213,53 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(after.isEmpty, s"jobs $after started after the last report write")
   }
 
-  test("a run starts at most 18 Spark jobs") {
-    // 18 measured with the four write branches concurrent: each query that
-    // starts while a shared cache is unbuilt submits its own job for that
-    // cache stage (15 when the branches run one after another). 23 with
-    // the transactions persisted, the header join and a repartition(1)
-    // per report.
+  test("a run starts at most 8 Spark jobs") {
+    // 8 measured: the fixture is a few KB, so the run is non-adaptive, and
+    // the five writes, the forecast's collect and the broadcasts are one
+    // job each, their stages sharing the cached frames' shuffle stages.
+    // 18 under AQE, where every shuffle and cache stage is a job of its
+    // own and each concurrent write that meets an unbuilt cache submits
+    // its own job for it; 23 with the transactions persisted, the header
+    // join and a repartition(1) per report.
     val jobs = runEvents.collect { case j: SparkListenerJobStart => j.jobId }
-    assert(jobs.size <= 18, s"${jobs.size} jobs: $jobs")
+    assert(jobs.size <= 8, s"${jobs.size} jobs: $jobs")
+  }
+
+  test("a small run is non-adaptive; no report write plans a SortAggregate") {
+    val seen = runEvents
+    val writes = reportWrites(seen)
+    val written = writes.values.flatten.toSet
+    val all = plans(seen)
+    val adaptive = all.collect { case (id, plan) if written(id) && plan.contains("AdaptiveSparkPlan") => id }
+    assert(adaptive.isEmpty, s"executions ${adaptive.distinct} planned adaptively")
+    // the per-order totals are a hash aggregate: with the string timestamp
+    // in an aggregate buffer they fell back to a sort aggregate and two sorts
+    Seq("orders", "daily_summary").foreach { name =>
+      val ps = all.collect { case (id, plan) if writes(name)(id) => plan }
+      assert(ps.nonEmpty && ps.forall(_.contains("HashAggregate")), s"$name: ${ps.mkString("\n")}")
+      assert(!ps.exists(_.contains("SortAggregate")), s"$name: ${ps.mkString("\n")}")
+    }
+  }
+
+  test("run() frees what it persists and leaves the session's AQE flag as it found it") {
+    result
+    val (before, after) = persistedAround
+    assert((after -- before).isEmpty, s"persistent RDDs ${after -- before} outlived run()")
+    val (flagBefore, flagAfter) = aqeAround
+    assert(flagAfter == flagBefore)
+  }
+
+  test("the regime: non-adaptive at or under the per-core threshold, adaptive over it or unknown") {
+    val t = CandyPipeline.SmallInputBytesPerCore
+    assert(!CandyPipeline.adaptive(Some(0L), 4))
+    assert(!CandyPipeline.adaptive(Some(4 * t - 1), 4))
+    assert(!CandyPipeline.adaptive(Some(4 * t), 4))
+    assert(CandyPipeline.adaptive(Some(4 * t + 1), 4))
+    // the threshold is per core
+    assert(CandyPipeline.adaptive(Some(4 * t), 2))
+    assert(!CandyPipeline.adaptive(Some(4 * t), 8))
+    // a MongoDB or JDBC source cannot tell its size
+    assert(CandyPipeline.adaptive(None, 4))
   }
 
   test("no report write plans an Exchange SinglePartition") {
@@ -244,15 +295,22 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     Files.writeString(out.resolve("orders.csv").resolve("keep"), "x")
     val seen = ArrayBuffer.empty[SparkListenerEvent]
     val listener = recorder(seen)
+    // an explicit caller value, the opposite of what the fixture's size picks
+    val caller = spark.newSession()
+    caller.conf.set(aqe, "true")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     spark.sparkContext.addSparkListener(listener)
     try {
       val e = intercept[IOException] {
-        new CandyPipeline(spark, dataDir.toString, out.toString,
+        new CandyPipeline(caller, dataDir.toString, out.toString,
           LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run()
       }
       assert(e.getMessage.contains(out.resolve("orders.csv").toString), e.getMessage)
       runSentinel(seen)
     } finally spark.sparkContext.removeSparkListener(listener)
+    assert(caller.conf.getAll.get(aqe).contains("true"))
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- persisted
+    assert(left.isEmpty, s"persistent RDDs $left outlived the failed run()")
     val all = seen.synchronized(seen.toList)
     val sentinel = all.indexWhere(isSentinel)
     assert(sentinel >= 0, "sentinel job never reached the listener")
@@ -289,7 +347,8 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     // GraftSession's shuffle start width (8× the 4 shuffle partitions)
     // and its cache conf (GraftSessionSpec pins the value): persisted
     // frames must coalesce like any other shuffle, or the allocation's
-    // stages run 32 tasks on a few KB
+    // stages run 32 tasks on a few KB. The run is forced adaptive, the
+    // regime inputs over the gate's threshold take.
     val wide = spark.newSession()
     wide.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
     wide.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
@@ -300,16 +359,22 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
       override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized(seen += e)
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         seen.synchronized(seen += e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => seen.synchronized(seen += e)
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = Files.createTempDirectory("candy_wide")
       out.toFile.deleteOnExit()
       val r = new CandyPipeline(wide, dataDir.toString, out.toString,
-        LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run()
+        LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run(_ => true)
       assert(r.rowsWritten == want)
       runSentinel(seen)
     } finally spark.sparkContext.removeSparkListener(listener)
+    assert(plans(seen.synchronized(seen.toList)).exists(_._2.contains("AdaptiveSparkPlan")),
+      "the forced adaptive run planned nothing adaptively")
     val stages = seen.synchronized(seen.toList).collect { case s: SparkListenerStageSubmitted => s.stageInfo }
     assert(stages.nonEmpty, "no stage reached the listener")
     val wideStages = stages.filter(_.numTasks > maxTasks).map(s => s"${s.stageId}:${s.name}=${s.numTasks}")

@@ -115,16 +115,16 @@ object BenchHarness {
     * manager's local dirs (via reflection on `SparkEnv`, the only route
     * to `DiskBlockManager.localDirs`; falls back to the JVM-tmpdir
     * "blockmgr-"/"spark-" walk if the private API moved) — every 50 ms
-    * until their total size has held for 300 ms, with a bounded wait. The cleaner polls its
-    * reference queue every 100 ms, so a drain the collection started
-    * shows within that window. Only when the size moved does a second
-    * round collect once more, for stragglers whose weak refs surfaced
-    * during the poll; with nothing to drain the call returns after one
-    * collection and one window. Restricting the walk to our own dirs
-    * matters on a shared bench host: another Spark process's scratch
-    * churn under the same tmpdir would otherwise keep the global size
-    * unstable and stall every between-query gap to the full timeout
-    * (r13 ADVICE). Call OUTSIDE the timed window.
+    * until their total size has held for 300 ms, with a bounded wait.
+    * The cleaner polls its reference queue every 100 ms, so a drain the
+    * collection started shows within that window. Only when the size
+    * moved does a second round collect once more, for stragglers whose
+    * weak refs surfaced during the poll; with nothing to drain the call
+    * returns after one collection and one window. Restricting the walk
+    * to our own dirs matters on a shared bench host: another Spark
+    * process's scratch churn under the same tmpdir would otherwise keep
+    * the global size unstable and stall every between-query gap to the
+    * full timeout (r13 ADVICE). Call OUTSIDE the timed window.
     */
   def quiesce(spark: SparkSession, timeoutMs: Long = 120000L): Unit = {
     dropCheckpointBlocks(spark)

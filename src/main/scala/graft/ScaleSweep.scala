@@ -23,9 +23,8 @@ import scala.jdk.CollectionConverters._
   *  - per point, the family's setup, then `reps` timed runs per arm
   *    (in alternating rounds over the arms when the family is
   *    `interleaved`) with [[BenchHarness.quiesce]] after each, outside
-  *    its window (the
-  *    2M-doc cleaner echo, and the forced collection that keeps the
-  *    multi-hundred-MB text points alive: see quiesce);
+  *    its window (the 2M-doc cleaner echo, and the forced collection
+  *    that keeps the multi-hundred-MB text points alive: see quiesce);
   *  - min/med/max wherever a point takes more than one rep;
   *  - `SPARK_GRAFT_ONLY=a,b` keeps only the arms those names prefix;
   *  - `SPARK_GRAFT_ISOLATE=a,b` times the listed arms in a fresh JVM

@@ -217,8 +217,9 @@ object CandyPipeline {
   /** Whether a run over `scannedBytes` on `cores` cores runs under AQE.
     * At or under [[SmallInputBytesPerCore]] per core it does not: every
     * shuffle and cache stage would be a job of its own, and AQE would
-    * coalesce the allocation's shuffle into one task. Above it, AQE's
-    * balanced, coalesced partitions win. An unknown size (a MongoDB or
+    * coalesce the allocation's shuffle into one task. Above it the
+    * fold's few hash partitions are uneven, and AQE's balanced,
+    * coalesced partitions tie or win. An unknown size (a MongoDB or
     * JDBC source) keeps AQE.
     */
   def adaptive(scannedBytes: Option[Long], cores: Int): Boolean =

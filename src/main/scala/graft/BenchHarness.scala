@@ -120,13 +120,14 @@ object BenchHarness {
     * collection started shows within that window. Only when the size
     * moved does a second round collect once more, for stragglers whose
     * weak refs surfaced during the poll; with nothing to drain the call
-    * returns after one collection and one window. Restricting the walk
+    * returns after one collection and one window. Returns the number of
+    * collection rounds it took (1 or 2). Restricting the walk
     * to our own dirs matters on a shared bench host: another Spark
     * process's scratch churn under the same tmpdir would otherwise keep
     * the global size unstable and stall every between-query gap to the
     * full timeout (r13 ADVICE). Call OUTSIDE the timed window.
     */
-  def quiesce(spark: SparkSession, timeoutMs: Long = 120000L): Unit = {
+  def quiesce(spark: SparkSession, timeoutMs: Long = 120000L): Int = {
     dropCheckpointBlocks(spark)
     val roots = ownScratchDirs()
     def walk(f: java.io.File): Long =
@@ -151,7 +152,7 @@ object BenchHarness {
       }
       cur != first
     }
-    if (settled()) settled()
+    if (settled()) { settled(); 2 } else 1
   }
 
   // how long the scratch size must hold for quiesce, and how often it

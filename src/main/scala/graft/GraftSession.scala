@@ -68,10 +68,8 @@ object GraftSession {
       // symmetric relation) are kept. Measured on a 4-core host, with the
       // one-scan candy source: 205 → 32 tasks per candy operation, and
       // the benchmark's candy cpu_s 13.3 → 7.9 s (10 interleaved pairs).
-      // Since then the candy job runs non-adaptive on inputs of a few MB
-      // per core, the benchmark's paper size among them
-      // (CandyPipeline.adaptive); this conf still shapes its persisted
-      // frames over that size, and every other persisted plan.
+      // Since then the candy job runs non-adaptive (CandyPipeline.run);
+      // this conf shapes every other persisted plan.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // The status store retains job/stage/task/SQL-metric rows even
       // with the UI disabled, and its growth scales with TASK COUNT —

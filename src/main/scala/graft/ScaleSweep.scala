@@ -183,11 +183,7 @@ object ScaleSweep {
     System.err.println(s"[sweep:$family] $msg")
 
   private def measure(spark: SparkSession, fam: Family, a: Arm, p: Point): Seq[Run] =
-    (1 to fam.reps(p.n)).map { _ =>
-      val r = a.run(p)
-      BenchHarness.quiesce(spark)
-      r
-    }
+    inRounds(spark, fam, Seq(a), p)(a.name)
 
   /** `reps` rounds over `arms`, each arm once per round, the order
     * reversed every other round; each arm's runs in round order.

@@ -79,6 +79,13 @@ object CandyEtl {
     * dead config there): each day allocates against the FULL dimension
     * stock instead of carrying remaining stock across days, expressed as
     * a composite (product, day) allocation key — still one shuffle.
+    *
+    * The fold runs one partition per core, product `p` in partition
+    * `p mod cores` (both keys keep a product's rows together), so the
+    * dozens of products of a candy store split evenly over the cores
+    * whatever the session's shuffle settings: a hash of ids 1–36 into
+    * 4 partitions gives them 5, 9, 10 and 12 products, and AQE
+    * coalesces this shuffle into one task at paper size.
     */
   def allocate(priced: DataFrame, reloadDaily: Boolean = false): DataFrame = {
     val (input, key) =
@@ -93,7 +100,8 @@ object CandyEtl {
         keyCol = key,
         qtyCol = "qty",
         capCol = "stock",
-        orderCols = Seq("day_idx", "tx_seq", "item_pos"))
+        orderCols = Seq("day_idx", "tx_seq", "item_pos"),
+        slots = Some(priced.sparkSession.sparkContext.defaultParallelism -> col("product_id")))
       .withColumn("quantity", col("alloc_qty").cast(IntegerType))
       .withColumn(
         "line_total",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -42,6 +42,9 @@ object Allocation {
     *                  row of the key; read once at the start of each run)
     * @param orderCols total order of lines within a key — must be
     *                  deterministic (include a tiebreaker column)
+    * @param slots     explicit placement of the keys over the fold's
+    *                  partitions (see [[SortedGroupFold.appendColumn]]);
+    *                  a hash of the key when `None`
     */
   def greedy(
       lines: DataFrame,
@@ -49,11 +52,12 @@ object Allocation {
       qtyCol: String,
       capCol: String,
       orderCols: Seq[String],
-      allocCol: String = "alloc_qty"): DataFrame = {
+      allocCol: String = "alloc_qty",
+      slots: Option[(Int, Column)] = None): DataFrame = {
 
     val qi = lines.schema.fieldIndex(qtyCol)
     val ci = lines.schema.fieldIndex(capCol)
-    SortedGroupFold.appendColumn(lines, keyCol, orderCols, allocCol, DoubleType) {
+    SortedGroupFold.appendColumn(lines, keyCol, orderCols, allocCol, DoubleType, slots) {
       () => new SortedGroupFold.Fold {
         // O(1) state: the current key's remaining capacity
         private var remaining = 0.0

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -34,16 +34,24 @@ object SortedGroupFold {
     * streaming per-group fold over `df`, grouped by `groupCol` and
     * ordered by `orderCols` (must be a deterministic total order within
     * a group — include a tiebreaker).
+    *
+    * `slots = Some((n, id))` places every row in partition `id mod n`
+    * instead of hashing the group key; `id` is an integer column that is
+    * constant within a group. For a few dozen dense integer keys this
+    * spreads the groups evenly — `n` consecutive ids land in `n`
+    * distinct partitions — where hashing ids 1–36 into 4 partitions
+    * gives them 5, 9, 10 and 12 groups.
     */
   def appendColumn(
       df: DataFrame,
       groupCol: String,
       orderCols: Seq[String],
       outCol: String,
-      outType: DataType)(mkFold: () => Fold): DataFrame = {
+      outType: DataType,
+      slots: Option[(Int, Column)] = None)(mkFold: () => Fold): DataFrame = {
     val sortCols = (groupCol +: orderCols).map(col)
-    val parted = df
-      .repartition(col(groupCol))
+    val parted = slots
+      .fold(df.repartition(col(groupCol))) { case (n, id) => df.repartitionById(n, id) }
       .sortWithinPartitions(sortCols: _*)
 
     val inSchema = parted.schema

@@ -42,18 +42,18 @@ import scala.collection.mutable.ArrayBuffer
   * and forecast fit → forecast. Each report ends in one task, so on its
   * own a write leaves most cores idle; overlapped, the branches use them.
   *
-  * The regime is picked per run from the bytes the sources scan
-  * ([[CandyPipeline.adaptive]]). Small inputs run with AQE off: each
-  * write is then one job whose stages share the cached frames' shuffle
-  * stages, and the allocation folds its products in one hash partition
-  * per core. Under AQE every shuffle and cache stage is a job of its
-  * own, each write that starts while a shared cache is not built yet
-  * submits its own job for that cache stage, and at this size AQE
-  * coalesces the allocation's shuffle into one task. Large inputs keep
-  * AQE, whose coalesced partitions stay balanced where a few fixed hash
-  * partitions do not. The session's AQE flag is set for the duration of
-  * the run and restored on every path; the session is not to be shared
-  * with concurrent work while a run is in flight.
+  * A run is non-adaptive. The allocated lines are built first, by one
+  * job over every core; then each write is one job whose stages share
+  * the order totals' shuffle stage. Under AQE every shuffle and cache
+  * stage is a job of its own, each write that starts while a shared
+  * cache is not built yet submits its own job for that cache stage, and
+  * at paper size AQE coalesces the allocation's shuffle into one task.
+  * The allocation spreads its products over one partition per core
+  * itself ([[CandyEtl.allocate]]). The candy ladder (`CANDYSCALE.json`)
+  * times both regimes from paper size to 60 times it. The session's AQE
+  * flag is set for the duration of the run and restored on every path;
+  * the session is not to be shared with concurrent work while a run is
+  * in flight.
   */
 class CandyPipeline(
     spark: SparkSession,
@@ -65,32 +65,24 @@ class CandyPipeline(
     reloadInventoryDaily: Boolean = false,
     dimConfig: Option[CandyConfig] = None) {
 
-  /** The report frames, the number of cancelled order lines, and the
-    * rows written per report, keyed by report name in write order
-    * (`order_line_items`, `products_updated`, `orders`, `daily_summary`,
+  /** The number of cancelled order lines, and the rows written per
+    * report, keyed by report name in write order (`order_line_items`,
+    * `products_updated`, `orders`, `daily_summary`,
     * `sales_profit_forecast`).
     */
-  final case class Result(
-      orderLineItems: DataFrame,
-      productsUpdated: DataFrame,
-      orders: DataFrame,
-      dailySummary: DataFrame,
-      forecast: DataFrame,
-      cancelledLines: Long,
-      rowsWritten: ListMap[String, Long])
+  final case class Result(cancelledLines: Long, rowsWritten: ListMap[String, Long])
 
-  /** Run all stages and write the five CSV reports, in the regime
-    * [[CandyPipeline.adaptive]] picks for the bytes the sources scan and
-    * the context's cores. The five write branches run concurrently; if
-    * one fails, the others are cancelled and waited for, and the first
-    * failure is rethrown, so no Spark job of the run outlives this call.
+  /** Run all stages and write the five CSV reports. The five write
+    * branches run concurrently; if one fails, the others are cancelled
+    * and waited for, and the first failure is rethrown, so no Spark job
+    * of the run outlives this call.
     */
-  def run(): Result = run(CandyPipeline.adaptive(_, spark.sparkContext.defaultParallelism))
+  def run(): Result = run(adaptive = false)
 
-  /** [[run]] with the regime taken from `adaptive`, given the scanned
-    * bytes (`None` when a source cannot tell them).
+  /** [[run]] with AQE set to `adaptive` for its duration: the adaptive
+    * plan is kept for tests of how AQE shapes the persisted frames.
     */
-  private[graft] def run(adaptive: Option[Long] => Boolean): Result = {
+  private[graft] def run(adaptive: Boolean): Result = {
     val transactions = dimConfig match {
       // live MongoDB when the config opts in (MONGO_ENABLED); the
       // file-backed path otherwise — same selection shape as dimensions
@@ -108,7 +100,7 @@ class CandyPipeline(
 
     val conf = spark.conf
     val callerAqe = conf.getAll.get(CandyPipeline.Aqe)
-    conf.set(CandyPipeline.Aqe, adaptive(CandySources.scannedBytes(transactions, products)))
+    conf.set(CandyPipeline.Aqe, adaptive)
     val persisted = ArrayBuffer.empty[DataFrame]
     def persist(df: DataFrame): DataFrame = {
       persisted += df
@@ -117,6 +109,10 @@ class CandyPipeline(
     try {
       val allocated = persist(
         CandyEtl.allocate(CandyEtl.pricedLines(transactions, products), reloadInventoryDaily))
+      // built by one job over every core before the writes fan out: a
+      // write that met it unbuilt would fold its partitions inside its
+      // one task, or hold a core waiting on the task folding them
+      allocated.count()
 
       val lineItems = CandyEtl.orderLineItems(allocated)
       // Under daily inventory reload, "current stock" means stock after the
@@ -129,9 +125,6 @@ class CandyPipeline(
       val totals = persist(CandyEtl.orderTotals(allocated))
       val orders = CandyEtl.orders(totals)
       val daily = persist(CandyEtl.dailySummary(totals))
-      // set by the forecast branch; reading that branch's future makes it
-      // visible here
-      var forecast: DataFrame = null
 
       val written = CandyPipeline.concurrently(spark, Seq(
         () => CandyPipeline.writeLineItems(lineItems, outputDir),
@@ -139,10 +132,8 @@ class CandyPipeline(
         () => Seq(SingleFileCsvSink.write(orders, outputDir, "orders.csv")),
         () => Seq(SingleFileCsvSink.write(
           CandyEtl.formatDailySummary(daily), outputDir, "daily_summary.csv")),
-        () => {
-          forecast = forecastFrame(daily)
-          Seq(SingleFileCsvSink.write(forecast, outputDir, "sales_profit_forecast.csv"))
-        }))
+        () => Seq(SingleFileCsvSink.write(
+          forecastFrame(daily), outputDir, "sales_profit_forecast.csv"))))
       val Seq(Seq(lineItemRows, cancelled), Seq(stockRows), Seq(orderRows), Seq(dailyRows),
         Seq(forecastRows)) = written
       val rows = ListMap(
@@ -151,7 +142,7 @@ class CandyPipeline(
         "orders" -> orderRows,
         "daily_summary" -> dailyRows,
         "sales_profit_forecast" -> forecastRows)
-      Result(lineItems, stock, orders, daily, forecast, cancelled, rows)
+      Result(cancelled, rows)
     } finally {
       // dependents first: freeing a cache that a live one was built on
       // would re-plan the dependent one
@@ -206,24 +197,6 @@ class CandyPipeline(
 
 object CandyPipeline {
   private val Aqe = "spark.sql.adaptive.enabled"
-
-  /** Scanned bytes per core at or under which a run is non-adaptive.
-    * Placed by the candy ladder (`CANDYSCALE.json`, `ScaleSweep candy`,
-    * 4 cores): between the last rung the non-adaptive regime won
-    * (7.4 MB per core) and the first it lost (11.1 MB per core).
-    */
-  private[graft] val SmallInputBytesPerCore: Long = 8L << 20
-
-  /** Whether a run over `scannedBytes` on `cores` cores runs under AQE.
-    * At or under [[SmallInputBytesPerCore]] per core it does not: every
-    * shuffle and cache stage would be a job of its own, and AQE would
-    * coalesce the allocation's shuffle into one task. Above it the
-    * fold's few hash partitions are uneven, and AQE's balanced,
-    * coalesced partitions tie or win. An unknown size (a MongoDB or
-    * JDBC source) keeps AQE.
-    */
-  def adaptive(scannedBytes: Option[Long], cores: Int): Boolean =
-    scannedBytes.forall(_ > SmallInputBytesPerCore * cores)
 
   /** Write `order_line_items.csv`; returns its row count and the number of
     * cancelled lines (quantity 0), both observed on the one write job.

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.model.CandyModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import java.time.LocalDate
@@ -71,22 +70,6 @@ object CandySources {
       .json(days.map { case (file, _) => s"$dataDir/$file" }: _*)
       .withColumn("tx_seq", monotonically_increasing_id())
       .withColumn("day_idx", element_at(typedLit(days.toMap), col("_metadata.file_name")))
-  }
-
-  /** The bytes `frames` scan, from the file listings their sources made
-    * when they were planned: no Spark job, no second listing. `None`
-    * unless every leaf of every plan is a file relation — a MongoDB or
-    * JDBC source does not know its size before it is read.
-    */
-  def scannedBytes(frames: DataFrame*): Option[Long] = {
-    val sizes = frames.flatMap(_.queryExecution.analyzed.collectLeaves()).map {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => Some(fs.location.sizeInBytes)
-        case _ => None
-      }
-      case _ => None
-    }
-    if (sizes.nonEmpty && sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
   }
 
   /** Options for the day-collection MongoDB read, factored out so the

@@ -6,11 +6,10 @@ class BenchHarnessSpec extends AnyFunSuite with SparkTestBase {
 
   test("quiesce returns promptly when nothing drains") {
     spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
-    // the first call drains what the query above left
+    // the first call drains what the query above left; the second finds
+    // the scratch size already stable, so one collection and one 300 ms
+    // window, not a second round
     BenchHarness.quiesce(spark)
-    val t0 = System.nanoTime()
-    BenchHarness.quiesce(spark)
-    val secs = (System.nanoTime() - t0) / 1e9
-    assert(secs < 1.0, f"an idle quiesce took $secs%.2f s")
+    assert(BenchHarness.quiesce(spark) == 1)
   }
 }

@@ -132,4 +132,22 @@ class CandyEtlEdgeSpec extends AnyFunSuite with SparkTestBase {
     assert(stock(10) == 4 - 2 - 1) // filled 2 (tx1) + 1 (tx3)
     assert(stock(20) == 4)         // demand 5 > 4 cancelled entirely — no partial
   }
+
+  for (reload <- Seq(false, true)) {
+    test(s"allocate folds product p in partition p mod cores (reload=$reload)") {
+      val ids = 1 to 12
+      val tx = spark.createDataFrame(Seq(Row(1, 1, "2024-02-01T00:00:01.000000",
+          ids.map(p => Row(p, s"P$p", 1: Integer)))).asJava, CandyModel.transactionSchema)
+        .withColumn("tx_seq", monotonically_increasing_id())
+        .withColumn("day_idx", lit(0L))
+      val dims = spark.createDataFrame(ids.map(p => Row(p, s"P$p", "c", "s", "sh",
+          new java.math.BigDecimal("1.00"), new java.math.BigDecimal("0.50"), 1)).asJava,
+        CandyModel.productSchema)
+      val cores = spark.sparkContext.defaultParallelism
+      val placed = CandyEtl.allocate(CandyEtl.pricedLines(tx, dims), reload)
+        .select(col("product_id"), spark_partition_id()).collect()
+        .map(r => r.getInt(0) -> r.getInt(1)).toMap
+      assert(placed == ids.map(p => p -> p % cores).toMap)
+    }
+  }
 }

@@ -213,19 +213,19 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(after.isEmpty, s"jobs $after started after the last report write")
   }
 
-  test("a run starts at most 8 Spark jobs") {
-    // 8 measured: the fixture is a few KB, so the run is non-adaptive, and
-    // the five writes, the forecast's collect and the broadcasts are one
-    // job each, their stages sharing the cached frames' shuffle stages.
-    // 18 under AQE, where every shuffle and cache stage is a job of its
-    // own and each concurrent write that meets an unbuilt cache submits
-    // its own job for it; 23 with the transactions persisted, the header
-    // join and a repartition(1) per report.
+  test("a run starts at most 9 Spark jobs") {
+    // 9 measured: the run is non-adaptive; one job builds the allocated
+    // lines, and the five writes, the forecast's collect and the
+    // broadcasts are one job each, their stages sharing the order totals'
+    // shuffle stage. 18 under AQE, where every shuffle and cache stage is
+    // a job of its own and each concurrent write that meets an unbuilt
+    // cache submits its own job for it; 23 with the transactions
+    // persisted, the header join and a repartition(1) per report.
     val jobs = runEvents.collect { case j: SparkListenerJobStart => j.jobId }
-    assert(jobs.size <= 8, s"${jobs.size} jobs: $jobs")
+    assert(jobs.size <= 9, s"${jobs.size} jobs: $jobs")
   }
 
-  test("a small run is non-adaptive; no report write plans a SortAggregate") {
+  test("a run is non-adaptive; no report write plans a SortAggregate") {
     val seen = runEvents
     val writes = reportWrites(seen)
     val written = writes.values.flatten.toSet
@@ -247,19 +247,6 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert((after -- before).isEmpty, s"persistent RDDs ${after -- before} outlived run()")
     val (flagBefore, flagAfter) = aqeAround
     assert(flagAfter == flagBefore)
-  }
-
-  test("the regime: non-adaptive at or under the per-core threshold, adaptive over it or unknown") {
-    val t = CandyPipeline.SmallInputBytesPerCore
-    assert(!CandyPipeline.adaptive(Some(0L), 4))
-    assert(!CandyPipeline.adaptive(Some(4 * t - 1), 4))
-    assert(!CandyPipeline.adaptive(Some(4 * t), 4))
-    assert(CandyPipeline.adaptive(Some(4 * t + 1), 4))
-    // the threshold is per core
-    assert(CandyPipeline.adaptive(Some(4 * t), 2))
-    assert(!CandyPipeline.adaptive(Some(4 * t), 8))
-    // a MongoDB or JDBC source cannot tell its size
-    assert(CandyPipeline.adaptive(None, 4))
   }
 
   test("no report write plans an Exchange SinglePartition") {
@@ -295,7 +282,7 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     Files.writeString(out.resolve("orders.csv").resolve("keep"), "x")
     val seen = ArrayBuffer.empty[SparkListenerEvent]
     val listener = recorder(seen)
-    // an explicit caller value, the opposite of what the fixture's size picks
+    // an explicit caller value, the opposite of the run's
     val caller = spark.newSession()
     caller.conf.set(aqe, "true")
     val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -347,8 +334,8 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
     // GraftSession's shuffle start width (8× the 4 shuffle partitions)
     // and its cache conf (GraftSessionSpec pins the value): persisted
     // frames must coalesce like any other shuffle, or the allocation's
-    // stages run 32 tasks on a few KB. The run is forced adaptive, the
-    // regime inputs over the gate's threshold take.
+    // stages run 32 tasks on a few KB. The candy job runs non-adaptive,
+    // so this run is made adaptive through the test seam.
     val wide = spark.newSession()
     wide.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
     wide.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
@@ -369,7 +356,7 @@ class CandyPipelineSpec extends AnyFunSuite with SparkTestBase {
       val out = Files.createTempDirectory("candy_wide")
       out.toFile.deleteOnExit()
       val r = new CandyPipeline(wide, dataDir.toString, out.toString,
-        LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run(_ => true)
+        LocalDate.of(2024, 3, 1), LocalDate.of(2024, 3, 2)).run(adaptive = true)
       assert(r.rowsWritten == want)
       runSentinel(seen)
     } finally spark.sparkContext.removeSparkListener(listener)

@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
-import scala.jdk.CollectionConverters._
 
 /** The one multiLine scan over a date range reads the same transactions,
   * tagged with the same days and in the same within-day order, as reading
@@ -81,17 +80,5 @@ class CandySourcesSpec extends AnyFunSuite with SparkTestBase {
     val written = Files.list(out)
     try assert(written.count() == 0)
     finally written.close()
-  }
-
-  test("scannedBytes: the listed file sizes, and unknown for a source that is not files") {
-    val files = Files.list(dataDir)
-    val onDisk =
-      try files.iterator().asScala.map(Files.size).sum
-      finally files.close()
-    val tx = CandySources.transactions(spark, dataDir.toString, first, last)
-    val products = CandySources.products(spark, dataDir.toString)
-    assert(CandySources.scannedBytes(tx, products).contains(onDisk))
-    assert(CandySources.scannedBytes(tx).contains(onDisk - Files.size(dataDir.resolve("products.csv"))))
-    assert(CandySources.scannedBytes(tx, spark.range(3).toDF()).isEmpty)
   }
 }

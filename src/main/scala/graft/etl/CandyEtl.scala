@@ -83,9 +83,9 @@ object CandyEtl {
     * The fold runs one partition per core, product `p` in partition
     * `p mod cores` (both keys keep a product's rows together), so the
     * dozens of products of a candy store split evenly over the cores
-    * whatever the session's shuffle settings: a hash of ids 1–36 into
-    * 4 partitions gives them 5, 9, 10 and 12 products, and AQE
-    * coalesces this shuffle into one task at paper size.
+    * whatever the session's shuffle settings (see
+    * [[graft.operators.SortedGroupFold.appendColumn]]); AQE would
+    * coalesce a hashed fold into one task at paper size.
     */
   def allocate(priced: DataFrame, reloadDaily: Boolean = false): DataFrame = {
     val (input, key) =

@@ -89,11 +89,11 @@ object Bench {
         // triggers — shuffle-file unlinks, broadcast-removal RPCs — runs
         // ASYNC and lands inside the NEXT sample's window; measured as a
         // uniform ~+0.1 s per sample (sum of medians 71.7 → ~102 s).
-        // ScaleSweep keeps its inter-arm gc (BenchHarness.quiesce) because
-        // the text sweep OOMs without it and its arms are seconds-long; this
-        // bench's 143×3 sub-second samples cannot afford the cleaner
-        // echo, and the status-store retention caps already bound the
-        // only accumulation this JVM showed.
+        // The candy ladder keeps its inter-run gc (BenchHarness.quiesce)
+        // because its runs are seconds-long; this bench's 143×3
+        // sub-second samples cannot afford the cleaner echo, and the
+        // status-store retention caps already bound the only
+        // accumulation this JVM showed.
         s
       }
       val (median, minv) =

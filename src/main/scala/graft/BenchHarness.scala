@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The ONE measurement-session harness every bench/verify main shares
   * (r12 verdict #7): session setup, `SPARK_GRAFT_SQLCONF` A/B plumbing,
   * env subset filters, and the between-query unpersist discipline. Its
-  * callers are `Bench`, `ScaleSweep` (every scale family), `Verify`,
-  * `ProfMain`, `PlanSnap`, `ScaleDataGen` and perfbench's `Leg`. A
+  * callers are `Bench`, `Verify`, `ProfMain`, `PlanSnap`,
+  * `pipeline.CandyLadder` and perfbench's `Leg`. A
   * measurement-harness bug fixed in one copy and not the others is how
   * the r11 checkpoint-contamination episode stayed invisible for three
   * rounds — this object exists so there is exactly one copy to fix.
@@ -95,9 +95,8 @@ object BenchHarness {
     * outside the window, but the ContextCleaner work it triggers —
     * shuffle-file unlinks, broadcast-removal RPCs — runs ASYNC and lands
     * inside the NEXT sample (r12: a uniform ~+0.1 s per sub-second
-    * sample). Sweeps whose per-point working set OOMs without a forced
-    * collection (the text sweep's multi-hundred-MB points) call
-    * [[quiesce]], which adds it.
+    * sample). Callers whose timed runs are seconds long (the candy
+    * ladder) call [[quiesce]], which adds it and waits for the echo.
     */
   def dropCheckpointBlocks(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

@@ -51,8 +51,8 @@ object IvfCentroidsTrainer {
       ("/root/repo/tmp/testdata/sf1", 400), // N = 20000 → 400
       // the beyond-sf1 generation (r10 verdict #5: prove the ceiling
       // message's recipe actually executes): 10× shifted replicas of
-      // sf1 (tools: DuckDB CROSS JOIN range(10), the ScaleDataGen key
-      // stride) — N = 200000 → 4·⌈√100000⌉ = 1268
+      // sf1 (tools: DuckDB CROSS JOIN range(10), shifting every key by
+      // one stride per replica) — N = 200000 → 4·⌈√100000⌉ = 1268
       ("/root/repo/tmp/testdata/sf10", 1268))
     for ((dir, k) <- jobs) {
       val cells = graft.operators.Similarity.trainQuantizer(

@@ -1,11 +1,10 @@
 package graft.operators
 
-/** The deterministic synthetic image corpus shared by q151 and the
-  * image family of [[graft.ScaleSweep]]: docs come in groups of 4
-  * (`g = id / 4`) whose members are near-duplicate variants of one
-  * base image, so the
-  * perceptual-hash pipeline has planted within-group pairs and —
-  * by the mixing below — essentially no cross-group collisions.
+/** The deterministic synthetic image corpus of q151 and its specs:
+  * docs come in groups of 4 (`g = id / 4`) whose members are
+  * near-duplicate variants of one base image, so the perceptual-hash
+  * pipeline has planted within-group pairs and — by the mixing below —
+  * essentially no cross-group collisions.
   *
   * Kernel notes (earned at sf0.01, kept verbatim so the bench measures
   * the SAME corpus q151 is oracle-checked on):

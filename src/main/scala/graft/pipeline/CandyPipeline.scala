@@ -82,7 +82,7 @@ class CandyPipeline(
   /** [[run]] with AQE set to `adaptive` for its duration: the adaptive
     * plan is kept for tests of how AQE shapes the persisted frames.
     */
-  private[graft] def run(adaptive: Boolean): Result = {
+  private[pipeline] def run(adaptive: Boolean): Result = {
     val transactions = dimConfig match {
       // live MongoDB when the config opts in (MONGO_ENABLED); the
       // file-backed path otherwise — same selection shape as dimensions

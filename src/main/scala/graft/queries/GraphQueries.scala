@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   * hub node would cap via degree-based edge sampling (Pagh &
   * Tsourakakis 2012) before the adjacency build; basket sizes here are
   * order line counts, naturally small. Scale growth is measured, not
-  * asserted: `ScaleSweep graph` (GRAPHSCALE.json) fits time vs |E| for
-  * q110/q76/q50 at 1×/scaled replicas.
+  * asserted: GRAPHSCALE.json fits time vs |E| for q110/q76/q50 at
+  * 1×/scaled replicas.
   */
 object GraphQueries {
   private type Q = (SparkSession, String) => DataFrame
@@ -179,7 +179,7 @@ object GraphQueries {
     * Scale shape: kernel work drops from O(E^1.5) to O((pE)^1.5); at a
     * FIXED relative error p may shrink as E^(-1/3) (variance/T² stays
     * constant), making sampled work O(E) — linear in the corpus where
-    * exact counting is superlinear. `ScaleSweep graph` records exactly
+    * exact counting is superlinear. GRAPHSCALE.json records exactly
     * that schedule (`tri_sampled_kernel`, p = 0.3·k^(-1/3)). The exact
     * branch here is the in-query yardstick, priced like q70's exact
     * countDistinct: it keeps the envelope CHECKED, not assumed, at

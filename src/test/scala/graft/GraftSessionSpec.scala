@@ -115,8 +115,7 @@ class GraftSessionSpec extends AnyFunSuite {
     // deliberate addition to this list, not a drive-by
     val allowed = Set(
       "SPARK_GRAFT_BPE_MERGES", "SPARK_GRAFT_BUILDERCONF", "SPARK_GRAFT_CPUS",
-      "SPARK_GRAFT_ISOLATE", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_OUT_DIR",
-      "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_RUNS", "SPARK_GRAFT_SCALE_K",
+      "SPARK_GRAFT_ONLY", "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_RUNS",
       "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SQLCONF")
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
@@ -129,7 +128,7 @@ class GraftSessionSpec extends AnyFunSuite {
           .map(m => m.group(1) -> root.relativize(p).toString))
         .toList
       finally walk.close()
-    assert(found.map(_._1).toSet.contains("SPARK_GRAFT_ISOLATE"))
+    assert(found.map(_._1).toSet.contains("SPARK_GRAFT_CPUS"))
     val unlisted = found.filterNot { case (name, _) => allowed(name) }
     assert(unlisted.isEmpty, s"env vars not on the allowlist: $unlisted")
   }
